@@ -1,16 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 object Bench {
+  /** One query's timed run: wall seconds, whether it succeeded, and the
+    * Janino compiles (count and milliseconds) that ran meanwhile. */
+  final case class Run(name: String, secs: Double, ok: Boolean, compiles: Long, compileMs: Double)
+
+  /** Computes the full result, every column of every row, and discards it:
+    * `count()` would let column pruning skip work the result needs. */
+  def materialise(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
       // the job census below reads per-group job ids from the status
       // store AFTER all passes; the 1000-job default evicts the warm
       // pass's early queries (~700 jobs/pass × 4 passes) and reads 0
@@ -29,7 +33,7 @@ object Bench {
       .getOrElse(sfDir)
     var warmFailures = 0
     SparkEntry.queries.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count()
+      try materialise(fn(spark, warmDir))
       catch { case _: Throwable => warmFailures += 1 }
     }
     if (warmFailures > 0)
@@ -49,19 +53,24 @@ object Bench {
     // instead of timing a cache hit. A FAILING query must not masquerade
     // as a fast one (an exception path returns in ms) — failures are
     // named loudly on stderr and in the JSON.
-    def timedPass(passIdx: Int): Seq[(String, Double, Boolean)] = {
+    // Compiles are JVM-wide counters, read as deltas around each query.
+    def timedPass(passIdx: Int): Seq[Run] = {
       graft.operators.Dedup.clearSharedCache()
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         // job-group tag per (query, pass): the floor-attribution census
         // below reads the WARM pass's job count per query from the status
         // tracker — exact attribution, no listener-race sleeps
         spark.sparkContext.setJobGroup(s"$name#$passIdx", name)
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val ns0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         val ok =
-          try { fn(spark, sfDir).count(); true }
+          try { materialise(fn(spark, sfDir)); true }
           catch { case _: Throwable => false }
+        val secs = (System.nanoTime() - t0) / 1e9
         spark.sparkContext.clearJobGroup()
-        (name, (System.nanoTime() - t0) / 1e9, ok)
+        Run(name, secs, ok, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+          (CodeGenerator.compileTime - ns0) / 1e6)
       }
     }
     val passes = Seq(timedPass(0), timedPass(1), timedPass(2))
@@ -75,16 +84,17 @@ object Bench {
     val jobCounts = SparkEntry.queries.keys.toSeq.sorted.map { n =>
       n -> spark.sparkContext.statusTracker.getJobIdsForGroup(s"$n#2").length
     }.toMap
-    val names = passes.head.map(_._1)
+    val names = passes.head.map(_.name)
     val timed = names.zipWithIndex.map { case (name, i) =>
-      val ts = passes.map(_(i)._2)
-      (name, ts.min, passes.forall(_(i)._3), ts)
+      val ts = passes.map(_(i).secs)
+      (name, ts.min, passes.forall(_(i).ok), ts)
     }
     // per-pass suite totals + per-query outliers go into the compact JSON
     // so a noisy box is VISIBLE in the artifact instead of masquerading
     // as a regression (max/min > 2.5× and an absolute gap worth caring
     // about); full per-pass times live in the file sink below
-    val passTotals = passes.map(_.map(_._2).sum)
+    val passTotals = passes.map(_.map(_.secs).sum)
+    val passCompiles = passes.map(_.map(_.compiles).sum)
     val noisy = timed.collect {
       case (name, mn, _, ts) if ts.max > mn * 2.5 && ts.max - mn > 0.3 => name
     }
@@ -104,6 +114,7 @@ object Bench {
     val total = timed.map(_._2).sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val passTotalsJson = passTotals.map(dp3).mkString("[", ",", "]")
+    val passCompilesJson = passCompiles.mkString("[", ",", "]")
     // noisy list capped: names are diagnostic, the COUNT is the signal
     val noisyJson = noisy.take(6).map("\"" + _ + "\"").mkString("[", ",", "]")
     // Fit the per-query map to the remaining budget, slowest queries first
@@ -114,7 +125,7 @@ object Bench {
     def lineFor(qJson: String, omitted: Int, omittedSec: Double): String =
       s"""{"metric":"total","value":${dp3(total)},"unit":"sec","queries":$qJson,""" +
         s""""queries_omitted":$omitted,"omitted_sec":${dp3(omittedSec)},""" +
-        s""""failed":$failedJson,"pass_totals":$passTotalsJson,""" +
+        s""""failed":$failedJson,"pass_totals":$passTotalsJson,"pass_compiles":$passCompilesJson,""" +
         s""""noisy_n":${noisy.size},"noisy":$noisyJson,"detail":"bench_out.json","sf":"$sfDir"}"""
     val budget = 1850 // leaves room for sbt's trailing "[success] Total time" line
     val overhead = lineFor("{}", timed.size, total).length
@@ -194,11 +205,18 @@ object Bench {
     val jobsJson = timed
       .map { case (k, _, _, _) => s"\"" + k + "\":" + jobCounts.getOrElse(k, 0) }
       .mkString("{", ",", "}")
+    // per query and pass: [Janino compiles, compile ms]
+    val codegenJson = names.zipWithIndex
+      .map { case (k, i) =>
+        s"\"" + k + "\":" + passes.map(p => s"[${p(i).compiles},${dp3(p(i).compileMs)}]").mkString("[", ",", "]")
+      }
+      .mkString("{", ",", "}")
     val fileJson =
       s"""{"metric":"total","value":${dp3(total)},"unit":"sec","queries":$qsFull,""" +
         s""""failed":$failedJson,"pass_totals":$passTotalsJson,"noisy":$noisyFullJson,""" +
         s""""shared_cache":$sharedCache,"store_backed":$storeBacked,"sf":"$sfDir",""" +
-        s""""jobs":$jobsJson,"passes":$passesJson}"""
+        s""""jobs":$jobsJson,"passes":$passesJson,"pass_compiles":$passCompilesJson,""" +
+        s""""codegen":$codegenJson}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")),
       (fileJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

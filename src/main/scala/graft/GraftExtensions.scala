@@ -8,9 +8,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** Session extension wiring for graft's native Catalyst expressions.
   *
   * Activated with `spark.sql.extensions=graft.GraftExtensions` (set by
-  * [[GraftSession.builder]] and the Verify/Bench session builders), the
-  * public, cluster-safe way to ship custom expressions: every executor
-  * resolves the function from the session config, no registry hacking.
+  * [[GraftSession.builder]]), the public, cluster-safe way to ship custom
+  * expressions: every executor resolves the function from the session
+  * config, no registry hacking.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

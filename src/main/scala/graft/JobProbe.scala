@@ -22,14 +22,7 @@ object JobProbe {
       .getOrElse(
         Seq("train_epoch_plan", "sql_supplier_rev", "win_ntile", "dedup_incremental_idx"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     @volatile var jobs = 0

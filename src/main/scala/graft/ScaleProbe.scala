@@ -40,13 +40,7 @@ object ScaleProbe {
     // distinct-content premise the measurements rest on
     require(factor >= 1 && factor <= 26, s"factor must be in [1, 26], got $factor")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // synthetic dir keyed by (source, factor): a marker-only scheme with

@@ -2718,6 +2718,34 @@ object Similarity {
     s.createDataFrame(c.rdd, c.schema)
   }
 
+  /** Lifetime of ONE-SHOT persisted frames (no stamp, no cache entry —
+    * [[VectorIndex.absorb]]'s staged bodies, an exclusion build's graph
+    * stages): `apply` persists a frame and records it, `truncated` also
+    * returns it rebuilt on the persisted RDD — [[cachedTruncated]]'s
+    * plan-truncation barrier — and `release` unpersists everything
+    * recorded. The barrier matters for chained splices: a persisted
+    * frame's cached plan is carried (and rendered as a string on every
+    * AQE stage update) inside each consumer's plan, so without it the
+    * seed → refine → refine splice's plan grew multiplicatively —
+    * measured at sf0.001 on 4 CPUs, `absorb(400 → 1000)` spent ~320 of
+    * its 386 s on the driver between jobs; behind the barrier it takes
+    * ~25 s. Like [[cachedTruncated]], truncate graph- or id-grain
+    * frames, not corpus-sized vector frames (the RDD boundary re-encodes
+    * rows on every read). */
+  private[graft] final class Pins {
+    private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def apply(df: DataFrame): DataFrame = {
+      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      held += p
+      p
+    }
+    def truncated(df: DataFrame): DataFrame = {
+      val p = apply(df)
+      p.sparkSession.createDataFrame(p.rdd, p.schema)
+    }
+    def release(): Unit = held.foreach(_.unpersist(blocking = false))
+  }
+
   /** The stamp-cached SEED graph (the refine stage's input), exposed so
     * [[VectorIndex.build]]'s default path can persist it as the v5
     * `g0graph` body without a second construction. */
@@ -2762,9 +2790,10 @@ object Similarity {
     * g1', S₁). Affected sets grow one out-neighborhood per round but
     * stay delta-proportional (≤ \|S₁\|·(1+K) ids).
     *
-    * Returns (g0', g1', g2'); g0' and g1' come back PERSISTED (each
-    * feeds both its own body write and the next round's recompute) —
-    * the caller unpersists. */
+    * Returns (g0', g1', g2'); g0', g1' and the affected-id sets are
+    * held in `pins` (each feeds its own body write and the next round's
+    * recompute, behind a plan-truncation barrier) — the caller releases
+    * them. */
   private[graft] def nnGraphDelta(
       oldG0: DataFrame,
       oldG1: DataFrame,
@@ -2772,7 +2801,8 @@ object Similarity {
       oldLsh: DataFrame,
       deltaPairs: DataFrame,
       vecs: DataFrame,
-      oldFrom: Long): (DataFrame, DataFrame, DataFrame) = {
+      oldFrom: Long,
+      pins: Pins): (DataFrame, DataFrame, DataFrame) = {
     def score(pairs: DataFrame): DataFrame = pairs
       .join(vecs.select(col("vec_id").as("a"), col("qv").as("qa"), col("nq").as("na")), "a")
       .join(vecs.select(col("vec_id").as("b"), col("qv").as("qb"), col("nq").as("nb")), "b")
@@ -2810,11 +2840,10 @@ object Similarity {
         .unionByName(newSeeds.select(col("nb").as("a"), col("a").as("b")))
         .distinct())
     // 2. affected srcs re-ranked over (stored rows ∪ new pairs)
-    val aSrcs = scoredNew.select("src").distinct()
-    val g0New = oldG0
+    val aSrcs = pins.truncated(scoredNew.select("src").distinct())
+    val g0New = pins.truncated(oldG0
       .join(broadcast(aSrcs), Seq("src"), "left_anti")
-      .unionByName(topK(oldG0.join(broadcast(aSrcs), Seq("src")).unionByName(scoredNew)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .unionByName(topK(oldG0.join(broadcast(aSrcs), Seq("src")).unionByName(scoredNew))))
     // 3. one refine round spliced: re-rank set S = changed ∪ out_old ∪
     // out_new (the only possible targets of changed proposals), pivots =
     // newIn in-neighbors of S (the only possible proposers), everything
@@ -2824,11 +2853,11 @@ object Similarity {
         oldIn: DataFrame,
         newIn: DataFrame,
         changed: DataFrame): (DataFrame, DataFrame) = {
-      val sSet = changed
+      val sSet = pins.truncated(changed
         .select(col("src").as("id"))
         .unionByName(oldIn.join(broadcast(changed), Seq("src")).select(col("dst").as("id")))
         .unionByName(newIn.join(broadcast(changed), Seq("src")).select(col("dst").as("id")))
-        .distinct()
+        .distinct())
       val pivots = newIn
         .join(broadcast(sSet.select(col("id").as("dst"))), Seq("dst"))
         .select("src")
@@ -2852,7 +2881,7 @@ object Similarity {
       (out, sSet.select(col("id").as("src")))
     }
     val (g1Out, s1) = refineDelta(oldG1, oldG0, g0New, aSrcs)
-    val g1New = g1Out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val g1New = pins.truncated(g1Out)
     val (g2New, _) = refineDelta(oldG2, oldG1, g1New, s1)
     (g0New, g1New, g2New)
   }

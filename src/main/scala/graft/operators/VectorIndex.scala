@@ -172,22 +172,20 @@ object VectorIndex {
     // makes absorb's regeneration exact. The default path rides the same
     // stamp-cached construction the scan-time ann_graph_topk uses
     // (shared_cache); an exclusion build derives from its own filtered
-    // frames with a one-shot local persist.
+    // frames with one-shot local pins behind a plan-truncation barrier.
     val vecsSlim = assigned.select(col("vec_id"), col("qv"), col("nq"))
-    val pin = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val gLocal: Option[(org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] =
-      excludeFrom.map { _ =>
-        val g0 = Similarity.nnSeedGraph(bucketPairs, vecsSlim).persist(pin)
-        (g0, Similarity.nnRefine(g0, vecsSlim).persist(pin))
-      }
+    val pins = new Similarity.Pins
     // the SEED graph and the FIRST refine round land as their own bodies
     // (v5/v6): [[absorb]]'s O(delta) maintenance needs each refine
     // stage's INPUT, not just the final output
-    val (g0Frame, g1Frame, graph) = gLocal match {
+    val (g0Frame, g1Frame, graph) = excludeFrom match {
       case None =>
         (Similarity.nnG0Cached(s, dir), Similarity.nnG1Cached(s, dir),
           Similarity.nnGraphCached(s, dir))
-      case Some((g0, g1)) => (g0, g1, Similarity.nnRefine(g1, vecsSlim))
+      case Some(_) =>
+        val g0 = pins.truncated(Similarity.nnSeedGraph(bucketPairs, vecsSlim))
+        val g1 = pins.truncated(Similarity.nnRefine(g0, vecsSlim))
+        (g0, g1, Similarity.nnRefine(g1, vecsSlim))
     }
     try {
       g0Frame.write.mode("overwrite").parquet(s"$path/g0graph")
@@ -198,9 +196,7 @@ object VectorIndex {
       Similarity
         .gEntriesOfAssigned(assigned, Similarity.codebookRows(codebook))
         .coalesce(1).write.mode("overwrite").parquet(s"$path/gentries")
-    } finally gLocal.foreach { case (g0, g1) =>
-      g0.unpersist(blocking = false); g1.unpersist(blocking = false)
-    }
+    } finally pins.release()
     // meta follows the house convention (stamp, info, version) plus the
     // recorded batch exclusion ("" = none) so store_status reads all
     // four stores with one shape
@@ -253,7 +249,6 @@ object VectorIndex {
       throw new IllegalStateException(
         s"absorb: store at $path is missing or stale for $dir (excludeFrom=$oldFrom)")
     import s.implicits._
-    val pin = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val delta = Similarity
       .quantizedEmbeddings(s, dir)
       .filter(col("vec_id") >= oldFrom && col("vec_id") < newFrom)
@@ -261,60 +256,58 @@ object VectorIndex {
       when(col(a).isNull, col(b))
         .when(col(b).isNull, col(a))
         .otherwise(zip_with(col(a), col(b), _ + _))
-    // merged IVF codebook: old seed sums/counts + delta seed sums/counts,
-    // exact (both additive)
-    val mergedCb = graft.sources.Tables.stableParquet(s, s"$path/codebook")
-      .join(
-        delta
-          .groupBy((col("vec_id") % 16).cast("int").as("cell"))
-          .agg(call_function("graft_vec_sum", col("qv")).as("cvd"), count(lit(1)).as("cd")),
-        Seq("cell"), "full_outer")
-      .select(
-        col("cell"), zipAdd("cv", "cvd").as("cv"),
-        (coalesce(col("c"), lit(0L)) + coalesce(col("cd"), lit(0L))).as("c"))
-      .filter(Similarity.assertCentroidExact(col("cv"), "IVF centroid"))
-      .withColumn("nc", Similarity.selfDot(col("cv")))
-      // every multi-consumer frame below is PINNED: each staged write is
-      // its own action, and without the persists the reassignment (a
-      // full pass over the store) and the merged codebook re-run once
-      // per consumer — the recomputation class the pqFrames cache fixed,
-      // applied to the one-shot absorb
-      .persist(pin)
-    val codebook1 = Similarity.collapseCodebook(mergedCb)
-    // every vector re-scored against the merged codebook: stored rows
-    // (an empty base store's partitioned body has no readable schema —
-    // stand in the typed empty frame) + the delta
-    val stored =
-      try graft.sources.Tables.stableParquet(s, s"$path/vectors").select(col("vec_id"), col("qv"), col("nq"))
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          s.emptyDataset[(Long, Array[Long], Long)].toDF("vec_id", "qv", "nq")
-      }
-    val allVecs = stored
-      .unionByName(delta.select(col("vec_id"), col("qv"), col("nq")))
-      .persist(pin)
-    val reassigned = Similarity.ivfAssign(allVecs, codebook1).persist(pin)
-    // v6 RESIDUAL PQ: the rounded centroid moves with the merged sums,
-    // so every vector's residual changes and the old additive-sums merge
-    // no longer applies — recompute the subspace codebook and codes from
-    // the merged residual view (a linear pass over the store's own slim
-    // rows; the source table's floats are still never re-read)
-    val sd = Similarity.embDim(s) / 8
-    val rcents1 = Similarity
-      .roundedCentroids(Similarity.assignedCentRows(reassigned))
-      .persist(pin)
-    val resid = Similarity.residualOf(reassigned, rcents1, "vec_id").persist(pin)
-    val mergedPq = Similarity
-      .pqCentroids(Similarity.subspaceRows(resid, "vec_id", sd))
-      .persist(pin)
-    val newCodes = Similarity
-      .pqCodes(Similarity.pqAssigned(Similarity.subspaceRows(resid, "vec_id", sd), mergedPq))
-      .join(reassigned.select(col("vec_id"), col("cell")), "vec_id")
-    // stage every body (their plans READ the live bodies — overwrite in
-    // place would fail or corrupt), then swap; meta is already deleted
+    // every multi-consumer frame below is PINNED: each staged write is
+    // its own action, and without the persists the reassignment (a full
+    // pass over the store) and the merged codebook re-run once per
+    // consumer — the recomputation class the pqFrames cache fixed,
+    // applied to the one-shot absorb. Bounded-grain frames (codebook,
+    // centroids, graph splices) also sit behind a plan-truncation
+    // barrier (see [[Similarity.Pins]])
+    val pins = new Similarity.Pins
     val fs = GramIndex.metaPath(path).getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(GramIndex.metaPath(path), false)
     try {
+      // merged IVF codebook: old seed sums/counts + delta seed sums/counts,
+      // exact (both additive)
+      val mergedCb = pins.truncated(graft.sources.Tables.stableParquet(s, s"$path/codebook")
+        .join(
+          delta
+            .groupBy((col("vec_id") % 16).cast("int").as("cell"))
+            .agg(call_function("graft_vec_sum", col("qv")).as("cvd"), count(lit(1)).as("cd")),
+          Seq("cell"), "full_outer")
+        .select(
+          col("cell"), zipAdd("cv", "cvd").as("cv"),
+          (coalesce(col("c"), lit(0L)) + coalesce(col("cd"), lit(0L))).as("c"))
+        .filter(Similarity.assertCentroidExact(col("cv"), "IVF centroid"))
+        .withColumn("nc", Similarity.selfDot(col("cv"))))
+      val codebook1 = Similarity.collapseCodebook(mergedCb)
+      // every vector re-scored against the merged codebook: stored rows
+      // (an empty base store's partitioned body has no readable schema —
+      // stand in the typed empty frame) + the delta
+      val stored =
+        try graft.sources.Tables.stableParquet(s, s"$path/vectors").select(col("vec_id"), col("qv"), col("nq"))
+        catch {
+          case _: org.apache.spark.sql.AnalysisException =>
+            s.emptyDataset[(Long, Array[Long], Long)].toDF("vec_id", "qv", "nq")
+        }
+      val allVecs = pins(stored.unionByName(delta.select(col("vec_id"), col("qv"), col("nq"))))
+      val reassigned = pins(Similarity.ivfAssign(allVecs, codebook1))
+      // v6 RESIDUAL PQ: the rounded centroid moves with the merged sums,
+      // so every vector's residual changes and the old additive-sums merge
+      // no longer applies — recompute the subspace codebook and codes from
+      // the merged residual view (a linear pass over the store's own slim
+      // rows; the source table's floats are still never re-read)
+      val sd = Similarity.embDim(s) / 8
+      val rcents1 = pins.truncated(
+        Similarity.roundedCentroids(Similarity.assignedCentRows(reassigned)))
+      val resid = pins(Similarity.residualOf(reassigned, rcents1, "vec_id"))
+      // trained eagerly on the driver: a local frame, nothing to pin
+      val mergedPq = Similarity.pqCentroids(Similarity.subspaceRows(resid, "vec_id", sd))
+      val newCodes = Similarity
+        .pqCodes(Similarity.pqAssigned(Similarity.subspaceRows(resid, "vec_id", sd), mergedPq))
+        .join(reassigned.select(col("vec_id"), col("cell")), "vec_id")
+      // stage every body (their plans READ the live bodies — overwrite in
+      // place would fail or corrupt), then swap; meta is already deleted
+      fs.delete(GramIndex.metaPath(path), false)
       reassigned.write.mode("overwrite").partitionBy("cell").parquet(s"$path/vectors_new")
       mergedCb.coalesce(1).write.mode("overwrite").parquet(s"$path/codebook_new")
       graft.sources.Tables.stableParquet(s, s"$path/qsample")
@@ -334,42 +327,33 @@ object VectorIndex {
           case _: org.apache.spark.sql.AnalysisException =>
             s.emptyDataset[(Long, Int, Int)].toDF("vec_id", "t", "b")
         }
-      val mergedLsh = oldLsh
+      oldLsh
         .unionByName(Similarity.lshBucketPairs(delta, "vec_id"))
-        .persist(pin)
-      try {
-        mergedLsh.write.mode("overwrite").partitionBy("t", "b").parquet(s"$path/lshbuckets_new")
-        // graph-ANN bodies at O(delta) (r15, two-round since v6): the
-        // stored seed graph is spliced — only touched buckets re-pair,
-        // only affected srcs re-rank, only their in-neighbor pivots
-        // re-propose, and the first splice's re-rank set chains into the
-        // second round — and the result is ROW-IDENTICAL to a full
-        // regeneration (the monotone top-K and re-rank-set arguments in
-        // [[Similarity.nnGraphDelta]]; the parity spec compares against
-        // a rebuild byte for byte)
-        val (g0New, g1New, g2New) = Similarity.nnGraphDelta(
-          graft.sources.Tables.stableParquet(s, s"$path/g0graph"),
-          graft.sources.Tables.stableParquet(s, s"$path/g1graph"),
-          graft.sources.Tables.stableParquet(s, s"$path/nngraph"),
-          oldLsh,
-          Similarity.lshBucketPairs(delta, "vec_id"),
-          allVecs,
-          oldFrom)
-        try {
-          g0New.write.mode("overwrite").parquet(s"$path/g0graph_new")
-          g1New.write.mode("overwrite").parquet(s"$path/g1graph_new")
-          g2New.write.mode("overwrite").parquet(s"$path/nngraph_new")
-          rcents1.coalesce(1).write.mode("overwrite").parquet(s"$path/rcentroids_new")
-          Similarity.gEntriesOfAssigned(reassigned, mergedCb)
-            .coalesce(1).write.mode("overwrite").parquet(s"$path/gentries_new")
-        } finally {
-          g0New.unpersist(blocking = false)
-          g1New.unpersist(blocking = false)
-        }
-      } finally mergedLsh.unpersist(blocking = false)
-    } finally
-      Seq(reassigned, allVecs, mergedCb, mergedPq, resid, rcents1)
-        .foreach(_.unpersist(blocking = false))
+        .write.mode("overwrite").partitionBy("t", "b").parquet(s"$path/lshbuckets_new")
+      // graph-ANN bodies at O(delta) (r15, two-round since v6): the
+      // stored seed graph is spliced — only touched buckets re-pair,
+      // only affected srcs re-rank, only their in-neighbor pivots
+      // re-propose, and the first splice's re-rank set chains into the
+      // second round — and the result is ROW-IDENTICAL to a full
+      // regeneration (the monotone top-K and re-rank-set arguments in
+      // [[Similarity.nnGraphDelta]]; the parity spec compares against
+      // a rebuild byte for byte)
+      val (g0New, g1New, g2New) = Similarity.nnGraphDelta(
+        graft.sources.Tables.stableParquet(s, s"$path/g0graph"),
+        graft.sources.Tables.stableParquet(s, s"$path/g1graph"),
+        graft.sources.Tables.stableParquet(s, s"$path/nngraph"),
+        oldLsh,
+        Similarity.lshBucketPairs(delta, "vec_id"),
+        allVecs,
+        oldFrom,
+        pins)
+      g0New.write.mode("overwrite").parquet(s"$path/g0graph_new")
+      g1New.write.mode("overwrite").parquet(s"$path/g1graph_new")
+      g2New.write.mode("overwrite").parquet(s"$path/nngraph_new")
+      rcents1.coalesce(1).write.mode("overwrite").parquet(s"$path/rcentroids_new")
+      Similarity.gEntriesOfAssigned(reassigned, mergedCb)
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/gentries_new")
+    } finally pins.release()
     def swap(name: String): Unit = {
       val live = new org.apache.hadoop.fs.Path(s"$path/$name")
       val next = new org.apache.hadoop.fs.Path(s"$path/${name}_new")

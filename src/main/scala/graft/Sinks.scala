@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Export sinks — the Spark rendering of the reference's result
@@ -40,23 +41,29 @@ object Sinks {
     * stores without a transactional table format. NOT atomic: the rewrite
     * goes through a staging directory and a swap, so a reader never sees a
     * half-written store, but concurrent writers are the caller's problem
-    * (use a transactional format when you have one). The swap uses local
-    * java.io renames — on HDFS/S3 substitute the Hadoop FileSystem rename
-    * (same two-step shape; S3 needs a manifest or a table format since
-    * rename is copy-based there). */
+    * (use a transactional format when you have one). The swap renames
+    * through the Hadoop FileSystem ([[graft.operators.Store.rename]]), so
+    * it works on HDFS as on local disk; on S3 rename is copy-based and a
+    * manifest or table format is needed instead. */
   def upsertParquet(spark: org.apache.spark.sql.SparkSession, path: String, updates: DataFrame, key: String): Unit = {
-    val target = new java.io.File(path)
-    val old = new java.io.File(path + ".old")
+    import graft.operators.Store.rename
+    val target = new Path(path)
+    val old = new Path(path + ".old")
+    val staging = new Path(path + ".staging")
+    val fs = graft.operators.Store.fs(spark, target)
+    def remove(p: Path): Unit =
+      if (fs.exists(p) && !fs.delete(p, true))
+        throw new java.io.IOException(s"upsertParquet: cleanup of $p failed")
     // self-heal the one non-atomic window: a crash between the two renames
     // below leaves no live target but a complete `.old` — restore it so
     // this run merges against the last consistent store instead of
     // resurrecting from nothing
-    if (!target.exists() && old.exists()) mustRename(old, target)
+    if (!fs.exists(target) && fs.exists(old)) rename(fs, old, target)
     // a stale `.old` alongside a live target is leftover garbage from a
     // crashed cleanup; it would make the swap's first rename fail
-    if (old.exists()) rmTree(old)
+    remove(old)
     val merged =
-      if (target.exists()) {
+      if (fs.exists(target)) {
         val base = spark.read.parquet(path)
         base
           // null-safe equality: a NULL-key update must still REPLACE the
@@ -66,39 +73,21 @@ object Sinks {
             base(key) <=> org.apache.spark.sql.functions.col("__k"), "left_anti")
           .unionByName(updates)
       } else updates
-    val staging = new java.io.File(path + ".staging")
-    merged.write.mode(SaveMode.Overwrite).parquet(staging.getPath)
-    if (target.exists()) {
-      mustRename(target, old)
-      try mustRename(staging, target)
+    merged.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    if (fs.exists(target)) {
+      rename(fs, target, old)
+      try rename(fs, staging, target)
       catch {
         case e: java.io.IOException =>
           // roll back so readers keep serving the previous consistent store;
           // if even the rollback fails, keep the ORIGINAL failure primary
-          try mustRename(old, target)
+          try rename(fs, old, target)
           catch { case rb: java.io.IOException => e.addSuppressed(rb) }
           throw e
       }
-      rmTree(old)
-    } else mustRename(staging, target)
+      remove(old)
+    } else rename(fs, staging, target)
   }
-
-  /** Rename that REFUSES to fail silently — `java.io.File.renameTo` returns
-    * a boolean that is fatally easy to ignore (a prior version did, and a
-    * crashed run could then serve stale data forever without a word). */
-  private[graft] def mustRename(src: java.io.File, dst: java.io.File): Unit =
-    if (!src.renameTo(dst))
-      throw new java.io.IOException(
-        s"upsertParquet: rename $src -> $dst failed (src exists=${src.exists()}, dst exists=${dst.exists()})")
-
-  private def rmTree(f: java.io.File): Unit =
-    try if (f.isDirectory) org.apache.commons.io.FileUtils.deleteDirectory(f)
-    else if (f.exists() && !f.delete())
-      throw new java.io.IOException(s"could not delete $f")
-    catch {
-      case e: java.io.IOException =>
-        throw new java.io.IOException(s"upsertParquet: cleanup of $f failed", e)
-    }
 
   /** JDBC export — the Spark rendering of the reference's SQLite transfer
     * (main.py:300-338: sample tables copied into a second queryable store

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -10,12 +11,12 @@ import org.apache.spark.util.sketch.BloomFilter
   * warm path: the admission gate probes these bits instead of paying a
   * corpus scan per crawl to rebuild them.
   *
-  * Layout under `path` (any Hadoop filesystem, like the other stores):
+  * Layout under `path` (any Hadoop filesystem; stamp, meta, staged
+  * commit and freshness follow [[Store]]):
   *   - `filter.bloom` — the `BloomFilter.writeTo` wire bytes over
   *     `xxhash64(text)` of every established (non-batch) document.
-  *   - `meta` — freshness stamp ([[PipelineCache.sourceStamp]]),
-  *     excluded batch source, format version, and the SIZING PAIR
-  *     `(expectedItems, numBits)` the filter was created with.
+  *   - meta extras `expected` and `numBits` — the SIZING PAIR the filter
+  *     was created with.
   *
   * The sizing pair is meta, not trivia: Bloom merge compatibility
   * requires identical bit count AND hash count, and the hash count is
@@ -34,11 +35,6 @@ import org.apache.spark.util.sketch.BloomFilter
   * rebuild — spec-pinned, the strongest parity any of the stores offers.
   * Cost is one batch-side scan (filter-pushed) + an O(bits) OR; the
   * corpus text is never re-read.
-  *
-  * Crash safety (the stores' shared contract): meta is deleted FIRST
-  * and rewritten LAST around any data write, so a crash leaves a
-  * stale-by-stamp store that the next consumer rebuilds — never a
-  * silently wrong one.
   */
 object BloomStore {
 
@@ -47,6 +43,9 @@ object BloomStore {
   /** Code-version token: bump when the key derivation (xxhash64 of raw
     * text) or the wire format changes. */
   private[graft] val FormatVersion = "v1:xxhash64:sketch"
+
+  private[graft] val store = Store.Decl("bloom_store", "graft_bloom_store", "documents.parquet",
+    Seq("filter.bloom"), Some(GramIndex.DefaultDeltaSource))(_ => FormatVersion)
 
   /** Build (overwrite) the filter at `path` from every document in `dir`
     * that is NOT the incoming batch (NULL source = established corpus,
@@ -62,60 +61,28 @@ object BloomStore {
     val docs = Tables.documents(s, dir)
     val expected = math.max(docs.count(), 1L)
     val numBits = BloomFilter.optimalNumOfBits(expected, Fpp)
-    val bf = docs
-      .filter(!(col("source") <=> lit(deltaSource)))
-      .filter(col("text").isNotNull)
-      .select(xxhash64(col("text")).as("k"))
-      .stat
-      .bloomFilter("k", expected, numBits)
-    val fs = GramIndex.metaPath(path).getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(GramIndex.metaPath(path), false)
-    writeFilter(s, path, bf)
-    GramIndex.writeMeta(
-      s,
-      path,
-      Seq(GramIndex.stamp(dir), deltaSource, FormatVersion, expected.toString, numBits.toString)
-        .mkString("\n"))
+    val bf = filterOf(docs.filter(!(col("source") <=> lit(deltaSource))), expected, numBits)
+    commit(s, dir, path, deltaSource, bf, expected, numBits)
   }
 
   /** Fold the admitted `oldDelta` batch into the filter and re-bind the
     * exclusion to `newDelta` — one batch scan + one bit-OR, never a
-    * corpus scan. Preconditions ([[GramIndex.absorb]]'s, loudly
-    * enforced): the store is fresh for `oldDelta`, and no `newDelta`
-    * rows have landed yet. Post-condition (spec-pinned): byte-identical
-    * to `build(..., newDelta)` from scratch. */
+    * corpus scan. Preconditions: [[Store.absorbable]]'s. Post-condition
+    * (spec-pinned): byte-identical to `build(..., newDelta)` from
+    * scratch. */
   def absorb(
       s: SparkSession,
       dir: String,
       path: String,
       oldDelta: String = GramIndex.DefaultDeltaSource,
       newDelta: String = "src20"): Unit = {
-    if (!isFresh(s, dir, path, oldDelta))
-      throw new IllegalStateException(
-        s"absorb: bloom store at $path is missing or stale for $dir (deltaSource=$oldDelta)")
-    val docs = Tables.documents(s, dir)
-    if (docs.filter(col("source") === newDelta).limit(1).count() > 0)
-      throw new IllegalStateException(
-        s"absorb: table already holds '$newDelta' rows — absorb must run before the " +
-          "next batch lands (rebuild instead)")
-    val meta = GramIndex.readMeta(s, path).get
-    val (expected, numBits) = (meta(3).toLong, meta(4).toLong)
+    val meta = Store.absorbable(s, store, dir, path, oldDelta, newDelta)
+    val (expected, numBits) = (meta("expected").toLong, meta("numBits").toLong)
     val base = readFilter(s, path)
-    val batchBf = docs
-      .filter(col("source") === oldDelta)
-      .filter(col("text").isNotNull)
-      .select(xxhash64(col("text")).as("k"))
-      .stat
-      .bloomFilter("k", expected, numBits) // ORIGINAL sizing pair → mergeable
-    val fs = GramIndex.metaPath(path).getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(GramIndex.metaPath(path), false)
-    base.mergeInPlace(batchBf)
-    writeFilter(s, path, base)
-    GramIndex.writeMeta(
-      s,
-      path,
-      Seq(GramIndex.stamp(dir), newDelta, FormatVersion, expected.toString, numBits.toString)
-        .mkString("\n"))
+    // ORIGINAL sizing pair → mergeable
+    base.mergeInPlace(filterOf(
+      Tables.documents(s, dir).filter(col("source") === oldDelta), expected, numBits))
+    commit(s, dir, path, newDelta, base, expected, numBits)
   }
 
   /** True iff the store exists and matches the CURRENT on-disk corpus
@@ -125,25 +92,28 @@ object BloomStore {
       dir: String,
       path: String,
       deltaSource: String = GramIndex.DefaultDeltaSource): Boolean =
-    GramIndex.readMeta(s, path).exists { lines =>
-      lines.length >= 5 && lines(0) == GramIndex.stamp(dir) && lines(1) == deltaSource &&
-      lines(2) == FormatVersion
-    }
+    Store.fresh(s, store, dir, path, Some(deltaSource)).isDefined
 
   /** Estimated-cardinality / expectedItems — the store's capacity gauge:
     * past ~1.0 the realized fpp exceeds nominal and a re-sized rebuild
     * is due (exactness is unaffected either way). */
   def saturation(s: SparkSession, path: String): Double = {
-    val expected = GramIndex.readMeta(s, path).get(3).toLong
+    val expected = Store.readMeta(s, path).get("expected").toLong
     readFilter(s, path).cardinality().toDouble / expected
   }
+
+  private def filterOf(docs: DataFrame, expected: Long, numBits: Long): BloomFilter =
+    docs
+      .filter(col("text").isNotNull)
+      .select(xxhash64(col("text")).as("k"))
+      .stat
+      .bloomFilter("k", expected, numBits)
 
   /** The stored filter's wire bytes (the literal [[CorpusOps
     * .dedupIncrementalBloom]] folds into its probe expression). */
   private[graft] def readFilterBytes(s: SparkSession, path: String): Array[Byte] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/filter.bloom")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
+    val p = new Path(s"$path/filter.bloom")
+    val in = Store.fs(s, p).open(p)
     try org.apache.commons.io.IOUtils.toByteArray(in)
     finally in.close()
   }
@@ -151,11 +121,20 @@ object BloomStore {
   private def readFilter(s: SparkSession, path: String): BloomFilter =
     BloomFilter.readFrom(readFilterBytes(s, path))
 
-  private def writeFilter(s: SparkSession, path: String, bf: BloomFilter): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/filter.bloom")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try bf.writeTo(out)
-    finally out.close()
-  }
+  private def commit(
+      s: SparkSession,
+      dir: String,
+      path: String,
+      binding: String,
+      bf: BloomFilter,
+      expected: Long,
+      numBits: Long): Unit =
+    Store.commit(s, store, dir, path, binding,
+      Map("expected" -> expected.toString, "numBits" -> numBits.toString))(
+      "filter.bloom" -> { (staged: String) =>
+        val p = new Path(staged)
+        val out = Store.fs(s, p).create(p, true)
+        try bf.writeTo(out)
+        finally out.close()
+      })
 }

@@ -978,25 +978,23 @@ object CorpusOps {
     * (any Hadoop filesystem — HDFS/object-store URIs work, the store IO
     * goes through the Hadoop FS API throughout), else the local tmpdir. */
   private[graft] def defaultIndexPath(s: SparkSession, dir: String): String =
-    storePath(s, dir, "graft_gram_index")
+    Store.path(s, dir, GramIndex.store)
 
   /** [[BloomStore]]'s per-dataset location — same lifecycle as
     * [[defaultIndexPath]], serving `dedup_incremental_bloom`. */
   private[graft] def defaultBloomPath(s: SparkSession, dir: String): String =
-    storePath(s, dir, "graft_bloom_store")
+    Store.path(s, dir, BloomStore.store)
 
-  /** Index-lifecycle census — one row per persisted-store body
-    * ([[GramIndex]] grams/hashes, [[TextIndex]] postings/vocab,
-    * [[CorpusProfile]] rows, [[VectorIndex]] vectors/codebook/qsample —
-    * the latter stamped against the EMBEDDINGS table, its actual
-    * source): is the store present, is it FRESH for the
-    * corpus as it sits on disk right now (stamp + format version, the
-    * stores' own `isFresh` logic), which format version and auxiliary
-    * meta line it recorded, and how many rows each body holds. The
-    * operator's view of store staleness WITHOUT reading store internals:
-    * meta files are a few bytes, and the row counts come from parquet
-    * footers (metadata-cheap, the [[Analytics.catalogCounts]] precedent —
-    * no column data is ever decoded).
+  /** Index-lifecycle census — one row per declared body of every
+    * persisted store ([[Store.Decl]]), each stamped against its own
+    * source table: is the store present, is it FRESH for its default
+    * consumer (stamp, format version and the declared binding — the
+    * same [[Store.matches]] the stores' own `isFresh` applies), which
+    * format version and binding it recorded, and how many rows each body
+    * holds. The operator's view of store staleness WITHOUT reading store
+    * internals: meta files are a few bytes, and the row counts come from
+    * parquet footers (metadata-cheap, the [[Analytics.catalogCounts]]
+    * precedent — no column data is ever decoded).
     *
     * Rows-only for the driver: the output describes engine-local store
     * state (paths, build history), which no portable SQL over the source
@@ -1005,81 +1003,37 @@ object CorpusOps {
     * present=false, and a post-build corpus change flips fresh to false.
     *
     * Scale: driver-side meta reads + footer counts — O(stores), no
-    * corpus scan, no shuffle. */
+    * corpus scan, no shuffle; one stamp per source table. */
   def storeStatus(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docStamp = GramIndex.stamp(dir)
-    // per-store extra meta constraint: each store's OWN isFresh binds
-    // more than (stamp, version) — the census must agree with that
-    // store's verdict, not report fresh for an index its default
-    // consumer would rebuild. gram_index binds the recorded delta
-    // source to the DEFAULT (the one constant the driver path builds
-    // with — a non-default-built index is deliberately reported stale
-    // because dedup_incremental_idx would rebuild it); text_index and
-    // vector_index bind their v2 batch-exclusion line to "" (the
-    // default no-exclusion binding text_search_idx / ann_ivf_idx
-    // require — an absorbed/exclusion-built store is stale to them);
-    // corpus_profile genuinely adopts ANY recorded rotation (its
-    // consumer reads the recorded source), so it checks none.
-    val anyMeta = (_: Array[String]) => true
-    val stores = Seq(
-      ("gram_index", defaultIndexPath(s, dir), GramIndex.FormatVersion, docStamp,
-        (l: Array[String]) => l(1) == GramIndex.DefaultDeltaSource, Seq("grams", "hashes")),
-      ("text_index", TextIndex.defaultPath(s, dir), TextIndex.FormatVersion, docStamp,
-        (l: Array[String]) => l.length >= 4 && l(3) == "", Seq("postings", "vocab", "doclen")),
-      ("corpus_profile", CorpusProfile.defaultPath(s, dir), CorpusProfile.FormatVersion,
-        docStamp, anyMeta, Seq("rows")),
-      ("vector_index", VectorIndex.defaultPath(s, dir), VectorIndex.formatVersion(s),
-        VectorIndex.stamp(dir), (l: Array[String]) => l.length >= 4 && l(3) == "",
-        Seq("vectors", "codebook", "qsample", "pqcodes", "pqcodebook", "lshbuckets",
-          "g0graph", "nngraph", "gentries")),
-      // the bloom store's body is raw filter bytes, not parquet — its
-      // row count is None by construction (footerCount finds no footers);
-      // presence/freshness are the census facts that matter for it
-      ("bloom_store", defaultBloomPath(s, dir), BloomStore.FormatVersion, docStamp,
-        // mirrors BloomStore.isFresh EXACTLY, incl. the ≥5-line shape:
-        // a truncated meta must read stale here too, not census-fresh
-        (l: Array[String]) => l.length >= 5 && l(1) == GramIndex.DefaultDeltaSource,
-        Seq("filter.bloom")),
-      // the quality-model store (r15) folds the curation policy into its
-      // VERSION line, so the version comparison IS the policy binding
-      ("quality_model", storePath(s, dir, "graft_quality"),
-        TextAnalysis.qualityStoreVersion(s), docStamp, anyMeta,
-        Seq("features", "labels", "weights", "scored")),
-      // the clustered-recall census bodies (r17): keyed on the
-      // embeddings stamp like the vector index, version folds every
-      // method-construction knob
-      ("recall_census", Similarity.recallStorePath(s, dir),
-        Similarity.recallStoreVersion(s), VectorIndex.stamp(dir), anyMeta,
-        Seq("clustered_pairs", "clustered_brute")))
-    val rows = stores.flatMap { case (name, path, wantVersion, stamp, metaOk, bodies) =>
-      val meta = GramIndex.readMeta(s, path).filter(_.length >= 3)
-      val fresh = meta.exists(l => l(0) == stamp && l(2) == wantVersion && metaOk(l))
+    val stores = Seq(GramIndex.store, TextIndex.store, CorpusProfile.store, VectorIndex.store,
+      BloomStore.store, TextAnalysis.QualityStore, Similarity.RecallStore)
+    val stamps = stores.map(_.table).distinct.map(t => t -> Store.stamp(s, dir, t)).toMap
+    val rows = stores.flatMap { d =>
+      val path = Store.path(s, dir, d)
+      val meta = Store.readMeta(s, path)
+      val fresh = meta.exists(Store.matches(_, stamps(d.table), d.version(s), d.binding))
       // Body counts resolve through the STORE-grain cache keyed by the
       // meta file's signature (mtime, length, content hash): every store
-      // build/absorb ends by rewriting meta, so an unchanged meta means
+      // commit ends by rewriting meta, so an unchanged meta means
       // unchanged bodies and the census skips the body listings entirely
-      // (the warm cost was the re-LISTING itself — the v3 vector store's
+      // (the warm cost was the re-LISTING itself — the vector store's
       // partitioned bodies cost ~1s of recursive Hadoop-FS walking per
       // call even when every footer was already memoized). Freshness is
       // NOT cached — it re-derives from the live corpus stamp above, so
       // a corpus change still flips fresh with counts served warm.
       val counts: Map[String, Option[Long]] = meta match {
         case Some(m) =>
-          val st = fileSig(s, GramIndex.metaPath(path))
           // widen the signature with each body DIR's (mtime, length): a
           // body rewrite that lands with an identical-content, same-size,
           // same-granularity-mtime meta (sub-second rebuild of an
           // unchanged-stamp store) still flips the body dirs' own mtimes,
           // so it can no longer serve stale counts. |bodies| driver stats
           // — cheap next to the recursive walk the cache avoids.
-          val bodySig = bodies
-            .map(b => fileSig(s, new org.apache.hadoop.fs.Path(s"$path/$b")))
-            .hashCode()
-          val key =
-            ((st, bodySig), java.util.Arrays.hashCode(m.asInstanceOf[Array[AnyRef]]))
+          val key = (fileSig(s, Store.metaPath(path)),
+            d.bodies.map(b => fileSig(s, new org.apache.hadoop.fs.Path(path, b))), m)
           Option(storeCountCache.get(path)).filter(_._1 == key).map(_._2).getOrElse {
-            val c = bodies.map(b => b -> footerCount(s, s"$path/$b")).toMap
+            val c = d.bodies.map(b => b -> footerCount(s, s"$path/$b")).toMap
             storeCountCache.put(path, (key, c))
             c
           }
@@ -1087,10 +1041,11 @@ object CorpusOps {
           // deleted/absent store: evict any stale entry (a later rebuild
           // at the same path must re-list) and report absence live
           storeCountCache.remove(path)
-          bodies.map(b => b -> footerCount(s, s"$path/$b")).toMap
+          d.bodies.map(b => b -> footerCount(s, s"$path/$b")).toMap
       }
-      bodies.map { body =>
-        (name, body, meta.isDefined, fresh, meta.map(_(2)), meta.map(_(1)), counts(body))
+      d.bodies.map { body =>
+        (d.name, body, meta.isDefined, fresh, meta.map(_("version")), meta.map(_("binding")),
+          counts(body))
       }
     }
     rows.toDF("store", "body", "present", "fresh", "format_version", "recorded_info", "n_rows")
@@ -1116,7 +1071,7 @@ object CorpusOps {
   private val storeCountCache =
     new java.util.concurrent.ConcurrentHashMap[
       String,
-      ((((Long, Long), Int), Int), Map[String, Option[Long]])]()
+      (((Long, Long), Seq[(Long, Long)], Store.Meta), Map[String, Option[Long]])]()
 
   /** Row count of a parquet store body read ENTIRELY on the driver from
     * file footers (recursive listing + per-file record counts via
@@ -1215,17 +1170,6 @@ object CorpusOps {
         // surfaced the same state as None via its AnalysisException
         case _: Exception => None
       }
-  }
-
-  private[operators] def storePath(s: SparkSession, dir: String, prefix: String): String = {
-    val root =
-      s.conf.get("spark.graft.corpus.storeRoot", System.getProperty("java.io.tmpdir"))
-    val h = java.security.MessageDigest
-      .getInstance("MD5")
-      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_))
-      .mkString
-    new org.apache.hadoop.fs.Path(root, s"${prefix}_$h").toString
   }
 
   /** The one-call curation materializer — the operator a training-data

@@ -24,11 +24,8 @@ import org.apache.spark.sql.functions._
   * suddenly 40% duplicate?") — reading it costs one ≤|sources|-row
   * parquet read once the profile exists.
   *
-  * Freshness/crash contract is [[GramIndex]]'s, verbatim: a stamp binds
-  * the profile to the exact on-disk table state + excluded batch source +
-  * format version; meta is deleted first and written last around
-  * [[absorb]]'s swap, so a crash leaves a stale-by-stamp profile that the
-  * next consumer rebuilds — never a silently wrong one.
+  * Stamp, meta, staged commit and freshness follow [[Store]]; the
+  * binding is the excluded batch source.
   */
 object CorpusProfile {
 
@@ -36,6 +33,11 @@ object CorpusProfile {
     * must never be served false-fresh into a merge with incompatible
     * sketch state. */
   private[graft] val FormatVersion = "profile-v1:hll12"
+
+  /** No default binding: [[corpusProfile]] adopts whichever batch an
+    * [[absorb]] rotated the profile to. */
+  private[graft] val store = Store.Decl("corpus_profile", "graft_corpus_profile",
+    "documents.parquet", Seq("rows"), None)(_ => FormatVersion)
 
   private val LgK = 12
 
@@ -60,19 +62,15 @@ object CorpusProfile {
     val corpus = Tables
       .documents(s, dir)
       .filter(coalesce(col("source") =!= deltaSource, lit(true)))
-    // invalidate BEFORE overwriting: a crash mid-write must leave a
-    // stale-by-meta profile, never an old fresh-looking meta over
-    // partial rows (same order as [[absorb]]'s swap)
-    val fs = GramIndex.metaPath(path).getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(GramIndex.metaPath(path), false)
-    profileOf(corpus).write.mode("overwrite").parquet(s"$path/rows")
-    GramIndex.writeMeta(
-      s, path, Seq(GramIndex.stamp(dir), deltaSource, FormatVersion).mkString("\n"))
+    commit(s, dir, path, deltaSource, profileOf(corpus))
   }
 
+  private def commit(s: SparkSession, dir: String, path: String, binding: String, rows: DataFrame) =
+    Store.commit(s, store, dir, path, binding)(
+      "rows" -> ((p: String) => rows.write.mode("overwrite").parquet(p)))
+
   /** Fold an admitted batch into the profile and rotate the excluded
-    * source — same preconditions and crash contract as
-    * [[GramIndex.absorb]] (fresh base; next batch not yet landed). Cost:
+    * source — preconditions: [[Store.absorbable]]'s. Cost:
     * one batch-side scan (filter-pushed) + a ≤|sources|-row merge — the
     * corpus text is never re-read. Counters add; sketches merge via
     * `hll_union_agg` (lossless register max), so the result is
@@ -83,33 +81,15 @@ object CorpusProfile {
       path: String,
       oldDelta: String = GramIndex.DefaultDeltaSource,
       newDelta: String = "src20"): Unit = {
-    if (!isFresh(s, dir, path, oldDelta))
-      throw new IllegalStateException(
-        s"absorb: profile at $path is missing or stale for $dir (deltaSource=$oldDelta)")
-    val docs = Tables.documents(s, dir)
-    if (docs.filter(col("source") === newDelta).limit(1).count() > 0)
-      throw new IllegalStateException(
-        s"absorb: table already holds '$newDelta' rows — absorb must run before the " +
-          "next batch lands (rebuild instead)")
+    Store.absorbable(s, store, dir, path, oldDelta, newDelta)
     val merged = rows(s, path)
-      .unionByName(profileOf(docs.filter(col("source") === oldDelta)))
+      .unionByName(profileOf(Tables.documents(s, dir).filter(col("source") === oldDelta)))
       .groupBy("source")
       .agg(
         sum(col("n_docs")).as("n_docs"),
         sum(col("n_chars")).as("n_chars"),
         expr("hll_union_agg(content_hll, true)").as("content_hll"))
-    val fs = GramIndex
-      .metaPath(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(GramIndex.metaPath(path), false)
-    merged.write.mode("overwrite").parquet(s"$path/rows_new")
-    val live = new org.apache.hadoop.fs.Path(s"$path/rows")
-    val next = new org.apache.hadoop.fs.Path(s"$path/rows_new")
-    fs.delete(live, true)
-    if (!fs.rename(next, live))
-      throw new java.io.IOException(s"absorb: rename $next -> $live failed")
-    GramIndex.writeMeta(
-      s, path, Seq(GramIndex.stamp(dir), newDelta, FormatVersion).mkString("\n"))
+    commit(s, dir, path, newDelta, merged)
   }
 
   def isFresh(
@@ -117,10 +97,7 @@ object CorpusProfile {
       dir: String,
       path: String,
       deltaSource: String = GramIndex.DefaultDeltaSource): Boolean =
-    GramIndex.readMeta(s, path).exists { lines =>
-      lines.length >= 3 && lines(0) == GramIndex.stamp(dir) && lines(1) == deltaSource &&
-      lines(2) == FormatVersion
-    }
+    Store.fresh(s, store, dir, path, Some(deltaSource)).isDefined
 
   private[graft] def rows(s: SparkSession, path: String): DataFrame =
     graft.sources.Tables.stableParquet(s, s"$path/rows")
@@ -134,11 +111,8 @@ object CorpusProfile {
       col("n_chars"),
       expr("hll_sketch_estimate(content_hll)").as("distinct_est"))
 
-  /** Store location: `spark.graft.corpus.storeRoot` when set (any Hadoop
-    * filesystem), else the local tmpdir — same convention as the gram
-    * index. */
   private[graft] def defaultPath(s: SparkSession, dir: String): String =
-    CorpusOps.storePath(s, dir, "graft_corpus_profile")
+    Store.path(s, dir, store)
 
   /** Driver-run twin: build-if-stale (first call pays one corpus scan,
     * later calls read ≤|sources| rows), then join the EXACT per-source
@@ -155,10 +129,7 @@ object CorpusProfile {
     * stamp/version mismatch triggers build. */
   def corpusProfile(s: SparkSession, dir: String): DataFrame = {
     val path = defaultPath(s, dir)
-    val recorded = GramIndex
-      .readMeta(s, path)
-      .filter(l => l.length >= 3 && l(0) == GramIndex.stamp(dir) && l(2) == FormatVersion)
-      .map(_(1))
+    val recorded = Store.fresh(s, store, dir, path, None).map(_("binding"))
     val deltaSource = recorded.getOrElse { build(s, dir, path); GramIndex.DefaultDeltaSource }
     val exact = Tables
       .documents(s, dir)

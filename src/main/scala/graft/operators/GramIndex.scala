@@ -28,24 +28,11 @@ import org.apache.spark.sql.functions._
   *     100 TB of text per crawl.
   *   - `<path>/hashes`: distinct `md5(text)` of the corpus — the exact
   *     stage's probe set, ~32 bytes per distinct document.
-  *   - `<path>/meta`:   freshness stamp (the corpus table's file listing
-  *     — [[PipelineCache.sourceStamp]]'s token) + the excluded batch
-  *     source + the packing envelope, written via the Hadoop FileSystem
-  *     so HDFS/object-store index locations work unchanged.
   *
-  * Staleness contract: the stamp binds the index to the exact on-disk
-  * state of the documents table it was built from. In this repo corpus
-  * and batch share one table, so ANY table change (including appending
-  * the next crawl) conservatively invalidates; a production deployment
-  * with a separate corpus table stamps only that. Consumers check
-  * [[isFresh]] and rebuild (or fail loudly) — never serve silently
-  * stale candidates. Concurrency: [[build]] overwrites in place and the
-  * meta file is written LAST, so a crash mid-build leaves a stale-by-
-  * stamp index (rebuilt on next use), but a build racing a concurrent
-  * READER of the same path can fail that reader's scan — serialize
-  * builds against admissions per index path (the driver's usage is
-  * sequential), or write to a versioned path and swap, as
-  * [[graft.Sinks.upsertParquet]] does.
+  * Stamp, meta, staged commit and freshness follow [[Store]]: the stamp
+  * binds the index to the whole documents table, so any table change
+  * (including appending the next crawl) conservatively invalidates.
+  * Consumers check [[isFresh]] and rebuild (or fail loudly).
   *
   * Packing matches [[CorpusOps.dedupIncremental]]'s delta-flag scheme:
   * `dn = doc_id·2²¹ + n_grams·2 + flag` with flag 0 for corpus members,
@@ -59,9 +46,7 @@ object GramIndex {
 
   /** The driver dataset's incoming-batch source label — the default
     * `deltaSource` everywhere a build/freshness call takes one, and the
-    * binding [[graft.operators.CorpusOps.storeStatus]]'s census checks
-    * (ONE constant, so the census can never disagree with [[isFresh]]
-    * about which batch a default-built index excludes). */
+    * binding [[store]] declares for the census. */
   private[graft] val DefaultDeltaSource = "src19"
 
   /** df cap above which a gram cannot participate in rare-gram candidate
@@ -75,6 +60,9 @@ object GramIndex {
     * false-fresh with incompatible content. */
   private[graft] val FormatVersion = s"v1:pack$Pack:df$DfCap"
 
+  private[graft] val store = Store.Decl("gram_index", "graft_gram_index", "documents.parquet",
+    Seq("grams", "hashes"), Some(DefaultDeltaSource))(_ => FormatVersion)
+
   /** Build (overwrite) the index at `indexPath` from every document in
     * `dir` that is NOT the incoming batch (`source != deltaSource`;
     * NULL source = established corpus, same convention as admission). */
@@ -86,73 +74,16 @@ object GramIndex {
     val corpus = Tables
       .documents(s, dir)
       .filter(coalesce(col("source") =!= deltaSource, lit(true)))
-    val g = corpus
-      .select(col("doc_id"), call_function("graft_grams", col("text")).as("garr"))
-      .filter(col("garr").isNotNull)
-      .filter(
-        assert_true(
-          size(col("garr")) < Pack && col("doc_id") >= 0 && col("doc_id") < (1L << 42),
-          lit("GramIndex packing envelope exceeded: doc too large or doc_id out of range"))
-          .isNull)
-      .select(
-        (col("doc_id") * Pack * 2 + size(col("garr")) * 2).as("dn"),
-        explode(col("garr")).as("gram"))
-    // one aggregation, bounded state, map-side combined — the same
-    // no-straggler shape as Dedup.rarePairCounts, writing (gram, df, ds)
-    // instead of expanding pairs
-    g.groupBy("gram")
-      .agg(
-        count(lit(1)).as("df"),
-        call_function("graft_collect_capped", col("dn"), lit(DfCap)).as("ds"))
-      .repartitionByRange(col("gram"))
-      .write
-      .mode("overwrite")
-      .parquet(s"$indexPath/grams")
-    corpus
-      .select(md5(col("text")).as("h"))
-      .filter(col("h").isNotNull)
-      .distinct()
-      .write
-      .mode("overwrite")
-      .parquet(s"$indexPath/hashes")
-    writeMeta(s, indexPath, Seq(stamp(dir), deltaSource, FormatVersion).mkString("\n"))
+    commit(s, dir, indexPath, deltaSource, gramRows(corpus), hashRows(corpus))
   }
 
-  /** Fold the rows of `oldDelta` into the index — they are established
-    * corpus once admitted — and re-bind the exclusion to `newDelta`: the
-    * between-crawls maintenance step that closes the loop
-    * (build → admit src19 → absorb → the next crawl arrives as src20).
-    * Cost is one delta-side scan (filter-pushed) plus a LINEAR pass over
-    * the index (full-outer gram merge + hash union) — the corpus text is
-    * never re-scanned, which is the entire point of keeping the index.
-    *
-    * Post-condition (spec-pinned): the absorbed index is row-identical
-    * to `build(..., newDelta)` from scratch. That equivalence requires
-    * two loudly-enforced preconditions: the index is fresh for
-    * `oldDelta` (a stale base would merge into the wrong corpus), and
-    * the table holds no `newDelta` rows yet (they would be inside the
-    * old index but excluded from a rebuild — absorb must run BEFORE the
-    * next batch lands).
-    *
-    * Crash safety: the meta file is deleted FIRST and rewritten LAST, so
-    * a crash anywhere inside the swap leaves a stale-by-stamp index that
-    * the next consumer rebuilds — never a silently inconsistent one. */
-  def absorb(
-      s: SparkSession,
-      dir: String,
-      indexPath: String,
-      oldDelta: String = DefaultDeltaSource,
-      newDelta: String = "src20"): Unit = {
-    if (!isFresh(s, dir, indexPath, oldDelta))
-      throw new IllegalStateException(
-        s"absorb: index at $indexPath is missing or stale for $dir (deltaSource=$oldDelta)")
-    val docs = Tables.documents(s, dir)
-    if (docs.filter(col("source") === newDelta).limit(1).count() > 0)
-      throw new IllegalStateException(
-        s"absorb: table already holds '$newDelta' rows — absorb must run before the " +
-          "next batch lands (rebuild instead)")
-    val batch = docs.filter(col("source") === oldDelta)
-    val bg = batch
+  /** One (gram, df, ds) row per distinct gram of `docs`: one aggregation,
+    * bounded state, map-side combined — the same no-straggler shape as
+    * Dedup.rarePairCounts, writing (gram, df, ds) instead of expanding
+    * pairs. Build and absorb both derive their rows here, so the batch
+    * enters the index through the exact pipeline the corpus did. */
+  private def gramRows(docs: DataFrame): DataFrame =
+    docs
       .select(col("doc_id"), call_function("graft_grams", col("text")).as("garr"))
       .filter(col("garr").isNotNull)
       .filter(
@@ -165,8 +96,47 @@ object GramIndex {
         explode(col("garr")).as("gram"))
       .groupBy("gram")
       .agg(
-        count(lit(1)).as("df2"),
-        call_function("graft_collect_capped", col("dn"), lit(DfCap)).as("ds2"))
+        count(lit(1)).as("df"),
+        call_function("graft_collect_capped", col("dn"), lit(DfCap)).as("ds"))
+
+  private def hashRows(docs: DataFrame): DataFrame =
+    docs.select(md5(col("text")).as("h")).filter(col("h").isNotNull)
+
+  private def commit(
+      s: SparkSession,
+      dir: String,
+      indexPath: String,
+      binding: String,
+      grams: DataFrame,
+      hashes: DataFrame): Unit =
+    Store.commit(s, store, dir, indexPath, binding)(
+      "grams" -> (grams.repartitionByRange(col("gram")).write.mode("overwrite").parquet(_)),
+      "hashes" -> (hashes.distinct().write.mode("overwrite").parquet(_)))
+
+  /** Fold the rows of `oldDelta` into the index — they are established
+    * corpus once admitted — and re-bind the exclusion to `newDelta`: the
+    * between-crawls maintenance step that closes the loop
+    * (build → admit src19 → absorb → the next crawl arrives as src20).
+    * Cost is one delta-side scan (filter-pushed) plus a LINEAR pass over
+    * the index (full-outer gram merge + hash union) — the corpus text is
+    * never re-scanned, which is the entire point of keeping the index.
+    *
+    * Post-condition (spec-pinned): the absorbed index is row-identical
+    * to `build(..., newDelta)` from scratch. That equivalence requires
+    * the two preconditions [[Store.absorbable]] enforces loudly: the
+    * index is fresh for `oldDelta` (a stale base would merge into the
+    * wrong corpus), and the table holds no `newDelta` rows yet (they
+    * would be inside the old index but excluded from a rebuild — absorb
+    * must run BEFORE the next batch lands). */
+  def absorb(
+      s: SparkSession,
+      dir: String,
+      indexPath: String,
+      oldDelta: String = DefaultDeltaSource,
+      newDelta: String = "src20"): Unit = {
+    Store.absorbable(s, store, dir, indexPath, oldDelta, newDelta)
+    val batch = Tables.documents(s, dir).filter(col("source") === oldDelta)
+    val bg = gramRows(batch).select(col("gram"), col("df").as("df2"), col("ds").as("ds2"))
     val empty = expr("CAST(array() AS ARRAY<BIGINT>)")
     val mergedDf = coalesce(col("df"), lit(0L)) + coalesce(col("df2"), lit(0L))
     val merged = grams(s, indexPath)
@@ -182,25 +152,7 @@ object GramIndex {
           .otherwise(lit(null))
           .as("dsm"))
       .select(col("gram"), col("dfm").as("df"), col("dsm").as("ds"))
-    val mergedHashes = hashes(s, indexPath)
-      .unionByName(batch.select(md5(col("text")).as("h")).filter(col("h").isNotNull))
-      .distinct()
-    // invalidate before touching data; swap via staging (overwriting a
-    // path Spark is currently reading from is rejected, and rightly so)
-    val fs = metaPath(indexPath).getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(metaPath(indexPath), false)
-    merged.repartitionByRange(col("gram")).write.mode("overwrite").parquet(s"$indexPath/grams_new")
-    mergedHashes.write.mode("overwrite").parquet(s"$indexPath/hashes_new")
-    def swap(name: String): Unit = {
-      val live = new org.apache.hadoop.fs.Path(s"$indexPath/$name")
-      val next = new org.apache.hadoop.fs.Path(s"$indexPath/${name}_new")
-      fs.delete(live, true)
-      if (!fs.rename(next, live))
-        throw new java.io.IOException(s"absorb: rename $next -> $live failed")
-    }
-    swap("grams")
-    swap("hashes")
-    writeMeta(s, indexPath, Seq(stamp(dir), newDelta, FormatVersion).mkString("\n"))
+    commit(s, dir, indexPath, newDelta, merged, hashes(s, indexPath).unionByName(hashRows(batch)))
   }
 
   /** True iff the index at `indexPath` exists and was built from the
@@ -211,41 +163,11 @@ object GramIndex {
       dir: String,
       indexPath: String,
       deltaSource: String = DefaultDeltaSource): Boolean =
-    readMeta(s, indexPath).exists { lines =>
-      lines.length >= 3 && lines(0) == stamp(dir) && lines(1) == deltaSource &&
-      lines(2) == FormatVersion
-    }
+    Store.fresh(s, store, dir, indexPath, Some(deltaSource)).isDefined
 
   private[graft] def grams(s: SparkSession, indexPath: String): DataFrame =
     graft.sources.Tables.stableParquet(s, s"$indexPath/grams")
 
   private[graft] def hashes(s: SparkSession, indexPath: String): DataFrame =
     graft.sources.Tables.stableParquet(s, s"$indexPath/hashes")
-
-  private[operators] def stamp(dir: String): String =
-    PipelineCache.sourceStamp(dir, "documents.parquet")
-
-  private[operators] def metaPath(indexPath: String) =
-    new org.apache.hadoop.fs.Path(s"$indexPath/meta")
-
-  private[operators] def writeMeta(s: SparkSession, indexPath: String, content: String): Unit = {
-    val p = metaPath(indexPath)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private[operators] def readMeta(s: SparkSession, indexPath: String): Option[Array[String]] = {
-    val p = metaPath(indexPath)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = org.apache.commons.io.IOUtils.toByteArray(in)
-        Some(new String(bytes, java.nio.charset.StandardCharsets.UTF_8).split("\n", -1))
-      } finally in.close()
-    }
-  }
 }

@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Run-scoped cache of shared pipeline frames, keyed by (session, dir,
-  * tag) and stamped with a snapshot of the source table's file listing
-  * (name, mtime, length). Shared by [[Dedup]]'s candidate-pair pipelines
+  * tag) and stamped with the source table's [[Store.stamp]] (each file's
+  * relative path, length and mtime, listed through the Hadoop
+  * FileSystem). Shared by [[Dedup]]'s candidate-pair pipelines
   * and [[Similarity.annIvf]]'s query-sample frame.
   *
   * Lifecycle/staleness: if the source table changes on disk, the next
@@ -42,17 +43,6 @@ private[graft] object PipelineCache {
 
   private val cleanupHooked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
-
-  /** Cheap driver-side change stamp of one source table under `dir`.
-    * Also the freshness token of [[GramIndex]]'s on-disk metadata. */
-  private[graft] def sourceStamp(dir: String, table: String): String = {
-    val f = new java.io.File(dir, table)
-    def walk(x: java.io.File): Seq[String] =
-      if (x.isDirectory)
-        Option(x.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(walk)
-      else Seq(s"${x.getName}:${x.lastModified}:${x.length}")
-    walk(f).mkString(",")
-  }
 
   private def hookCleanup(s: SparkSession): Unit =
     if (cleanupHooked.add(s))
@@ -101,7 +91,7 @@ private[graft] object PipelineCache {
     val key = (s, dir, tag)
     val lock = locks.computeIfAbsent(key, _ => new Object)
     lock.synchronized {
-      val stamp = sourceStamp(dir, table)
+      val stamp = Store.stamp(s, dir, table)
       val cur = cache.get(key)
       if (cur != null && cur._1 == stamp) cur._2
       else {
@@ -121,7 +111,7 @@ private[graft] object PipelineCache {
     * pair frame). */
   def peek(tag: String, s: SparkSession, dir: String, table: String): Option[DataFrame] =
     Option(cache.get((s, dir, tag))).collect {
-      case (stamp, df) if stamp == sourceStamp(dir, table) => df
+      case (stamp, df) if stamp == Store.stamp(s, dir, table) => df
     }
 
   /** Driver-side VALUE twin of [[cached]] (r18): memoizes a bounded
@@ -138,7 +128,7 @@ private[graft] object PipelineCache {
     val key = (s, dir, tag)
     val lock = locks.computeIfAbsent(key, _ => new Object)
     lock.synchronized {
-      val stamp = sourceStamp(dir, table)
+      val stamp = Store.stamp(s, dir, table)
       val cur = values.get(key)
       if (cur != null && cur._1 == stamp) cur._2.asInstanceOf[T]
       else {

@@ -2188,38 +2188,33 @@ object Similarity {
     * reads + the shared census tail: no clustered-view rebuild, no six
     * pipelines, no driver bucket fetch (the r16 "1.51 s warm vs 5.41 s
     * bench" regime gap closes because the construction leaves the
-    * per-pass path entirely). Crash contract: meta deleted FIRST, bodies
-    * written, meta written LAST ([[CorpusProfile]]'s convention). */
+    * per-pass path entirely). Stamp, meta, staged commit and freshness
+    * follow [[Store]]. */
+  private[graft] val RecallStore = Store.Decl("recall_census", "graft_recall",
+    "embeddings.parquet", Seq("clustered_pairs", "clustered_brute"), Some(""))(
+    recallStoreVersion)
+
   private[graft] def recallStorePath(s: SparkSession, dir: String): String =
-    CorpusOps.storePath(s, dir, "graft_recall")
+    Store.path(s, dir, RecallStore)
 
   private[graft] def recallStoreVersion(s: SparkSession): String =
     s"v1:${VectorIndex.formatVersion(s)}:mp${graft.functions.LshProbes.Extra}:q4"
 
   private[graft] def recallStoreFresh(s: SparkSession, dir: String): Boolean =
-    GramIndex.readMeta(s, recallStorePath(s, dir)).exists(l =>
-      l.length >= 3 && l(0) == PipelineCache.sourceStamp(dir, "embeddings.parquet") &&
-        l(2) == recallStoreVersion(s))
+    Store.fresh(s, RecallStore, dir, recallStorePath(s, dir), Some("")).isDefined
 
   private[graft] def buildRecallStore(s: SparkSession, dir: String): Unit = {
-    val path = recallStorePath(s, dir)
-    val mp = GramIndex.metaPath(path)
-    mp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(mp, false)
     val (methods, brutePairs) = clusteredLegs(s, dir)
-    methods
+    val pairs = methods
       .map { case (m, df) =>
         df.select(lit(m).as("method"), col("query_id"), col("neighbor_id"))
       }
       .reduce(_ unionByName _)
-      // ≤ 5·5·|queries| rows — the codebook coalesce convention
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/clustered_pairs")
-    brutePairs
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/clustered_brute")
-    GramIndex.writeMeta(
-      s, path,
-      Seq(
-        PipelineCache.sourceStamp(dir, "embeddings.parquet"),
-        "recall", recallStoreVersion(s), "").mkString("\n"))
+    // ≤ 5·5·|queries| rows — the codebook coalesce convention
+    Store.commit(s, RecallStore, dir, recallStorePath(s, dir), "")(
+      "clustered_pairs" -> ((p: String) => pairs.coalesce(1).write.mode("overwrite").parquet(p)),
+      "clustered_brute" ->
+        ((p: String) => brutePairs.coalesce(1).write.mode("overwrite").parquet(p)))
   }
 
   private def clusteredLegs(
@@ -2899,8 +2894,8 @@ object Similarity {
     * all consumers still share ONE build per source stamp (shared_cache
     * disclosure) — and
     * [[VectorIndex.build]]'s default path persists exactly that cached
-    * frame (its meta is deleted before it calls back here, so the
-    * dispatch can never recurse into a half-written store). */
+    * frame (a rebuild of a fresh store reads the live body, which its
+    * staged [[Store.commit]] replaces only after every body is written). */
   private[graft] def nnGraphCached(s: SparkSession, dir: String): DataFrame = {
     val p = VectorIndex.defaultPath(s, dir)
     val stored =

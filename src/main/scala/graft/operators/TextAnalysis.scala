@@ -2341,12 +2341,13 @@ FROM mergetab ORDER BY rank"""
     * answers are hash-identical to the scan-time chain (the same DuckDB
     * oracles gate both). The curation-policy knobs fold into the meta
     * VERSION line, so a policy retune is stale-by-version and rebuilds
-    * ([[nbLabels]]' cache-tag rule lifted to the store). Crash contract:
-    * meta deleted first, bodies written, meta written LAST
-    * ([[CorpusProfile]]'s convention — a crash mid-build leaves a
-    * stale-by-stamp store the next consumer rebuilds). */
-  private def qualityStorePath(s: SparkSession, dir: String): String =
-    CorpusOps.storePath(s, dir, "graft_quality")
+    * ([[nbLabels]]' cache-tag rule lifted to the store). Stamp, meta,
+    * staged commit and freshness follow [[Store]]. */
+  private[graft] val QualityStore = Store.Decl("quality_model", "graft_quality",
+    "documents.parquet",
+    Seq("features", "labels", "weights", "scored", "lid_features", "lid_labels",
+      "lid_weights", "lid_scored", "dsir_scored"),
+    Some(""))(qualityStoreVersion)
 
   /** v2 (r16): adds the trained-langid bodies (lid_features /
     * lid_labels / lid_weights / lid_scored) and the DSIR fit+apply body
@@ -2361,49 +2362,41 @@ FROM mergetab ORDER BY rank"""
     s"v2:nb$NbBuckets:$keepLang:$minQ:dsir=${dsirTarget(s)}"
   }
 
-  private[operators] def qualityStoreFresh(s: SparkSession, dir: String): Boolean =
-    GramIndex.readMeta(s, qualityStorePath(s, dir)).exists(l =>
-      l.length >= 3 && l(0) == GramIndex.stamp(dir) && l(2) == qualityStoreVersion(s))
-
   private[graft] def buildQualityStore(s: SparkSession, dir: String): Unit = {
-    val path = qualityStorePath(s, dir)
-    val mp = GramIndex.metaPath(path)
-    mp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(mp, false)
     // the build rides the family's stamp-cached frames (one tokenize
-    // pass, one fit per stamp) and lands each as its own body; the two
-    // corpus-grain bodies stay parallel writes, the weight table
-    // coalesces (≤ 4097 rows — the codebook convention)
+    // pass, one fit per stamp) and lands each as its own body; the
+    // corpus-grain bodies stay parallel writes, the weight tables
+    // coalesce (≤ 4097 rows — the codebook convention)
     val feats = nbFeatures(s, dir)
     val labels = nbLabels(s, dir)
-    feats.write.mode("overwrite").parquet(s"$path/features")
-    labels.write.mode("overwrite").parquet(s"$path/labels")
     val weights = cachedQualityTrain(s, dir)
-    weights.coalesce(1).write.mode("overwrite").parquet(s"$path/weights")
-    qualityModelFrom(feats, weights)
-      .join(labels, "doc_id")
-      .write.mode("overwrite").parquet(s"$path/scored")
-    // v2: the trained-langid family bodies (same feature/label/weights/
-    // scored quartet at the language grain) …
     val lf = lidFeatures(s, dir)
-    val ll = lidLabels(s, dir)
-    lf.write.mode("overwrite").parquet(s"$path/lid_features")
-    ll.write.mode("overwrite").parquet(s"$path/lid_labels")
     val lw = cachedLidTrain(s, dir)
-    lw.coalesce(1).write.mode("overwrite").parquet(s"$path/lid_weights")
-    lidModelFrom(lf, lw).write.mode("overwrite").parquet(s"$path/lid_scored")
-    // … and the DSIR fit+apply body (r15 verdict #4: the per-pass corpus
-    // bigram refit becomes a once-per-(stamp, target) slim parquet read)
-    dsirScan(s, dir).write.mode("overwrite").parquet(s"$path/dsir_scored")
-    GramIndex.writeMeta(
-      s, path,
-      Seq(GramIndex.stamp(dir), "nb", qualityStoreVersion(s), "").mkString("\n"))
+    def plain(df: DataFrame) = (p: String) => df.write.mode("overwrite").parquet(p)
+    def single(df: DataFrame) = plain(df.coalesce(1))
+    Store.commit(s, QualityStore, dir, Store.path(s, dir, QualityStore), "")(
+      "features" -> plain(feats),
+      "labels" -> plain(labels),
+      "weights" -> single(weights),
+      "scored" -> plain(qualityModelFrom(feats, weights).join(labels, "doc_id")),
+      // v2: the trained-langid family bodies (same feature/label/weights/
+      // scored quartet at the language grain) …
+      "lid_features" -> plain(lf),
+      "lid_labels" -> plain(lidLabels(s, dir)),
+      "lid_weights" -> single(lw),
+      "lid_scored" -> plain(lidModelFrom(lf, lw)),
+      // … and the DSIR fit+apply body (r15 verdict #4: the per-pass
+      // corpus bigram refit becomes a once-per-(stamp, target) slim
+      // parquet read)
+      "dsir_scored" -> plain(dsirScan(s, dir)))
   }
 
   /** Build-if-stale + read one store body — the family's one dispatch
     * point ([[TextIndex.searchIndexed]]'s shape). */
   private def qualityBody(s: SparkSession, dir: String, name: String): DataFrame = {
-    if (!qualityStoreFresh(s, dir)) buildQualityStore(s, dir)
-    Tables.stableParquet(s, s"${qualityStorePath(s, dir)}/$name")
+    val path = Store.path(s, dir, QualityStore)
+    if (Store.fresh(s, QualityStore, dir, path, Some("")).isEmpty) buildQualityStore(s, dir)
+    Tables.stableParquet(s, s"$path/$name")
   }
 
   /** EVALUATE: confusion census of the NB decision against the policy

@@ -24,20 +24,15 @@ import org.apache.spark.sql.functions._
   *     stats — the query reads O(matching postings), not O(index).
   *   - `<path>/vocab`: `(tok, df)` — exact document frequencies, one row
   *     per type.
-  *   - `<path>/meta`: freshness stamp + exact corpus doc count (the IDF
-  *     numerator — counted once at build, a driver literal at query
-  *     time) + a FORMAT VERSION so a code change can never serve an old
-  *     index false-fresh ([[GramIndex]]'s convention, same meta plumbing).
+  *   - `<path>/doclen`: `(doc_id, dl)` — per-doc postings mass, BM25's
+  *     length normalization.
+  *   - meta extra `n`: the exact corpus doc count (the IDF numerator —
+  *     counted once at build, a driver literal at query time).
   *
-  * Staleness: the stamp binds the index to the documents table's on-disk
-  * state; [[searchIndexed]] rebuilds when stale (first driver call
-  * builds, later calls — e.g. bench passes — find it fresh, so the build
-  * reads as pass-1 warmup under the bench's `store_backed` flag).
-  * Concurrency follows [[GramIndex]]'s contract verbatim: meta is
-  * written LAST so a crash mid-build leaves a stale-by-stamp index, but
-  * a build racing a concurrent reader of the same path can fail that
-  * reader's scan — serialize builds against queries per index path, or
-  * stage-and-swap.
+  * Stamp, meta, staged commit and freshness follow [[Store]];
+  * [[searchIndexed]] rebuilds when stale (first driver call builds, later
+  * calls — e.g. bench passes — find it fresh, so the build reads as
+  * pass-1 warmup under the bench's `store_backed` flag).
   */
 object TextIndex {
 
@@ -48,6 +43,9 @@ object TextIndex {
     * the `doclen` body (per-doc postings mass Σ tf) that BM25's length
     * normalization reads — a v2 store has no doclen and rebuilds. */
   private[graft] val FormatVersion = "v3:ws-tok:tfidf+bm25"
+
+  private[graft] val store = Store.Decl("text_index", "graft_text_index", "documents.parquet",
+    Seq("postings", "vocab", "doclen"), Some(""))(_ => FormatVersion)
 
   /** Build (overwrite) the index at `indexPath` from `dir`'s documents.
     * `excludeSource`: the incoming-batch exclusion ([[GramIndex.build]]'s
@@ -64,44 +62,40 @@ object TextIndex {
     val docs = excludeSource.foldLeft(Tables.documents(s, dir)) { (df, src) =>
       df.filter(coalesce(col("source") =!= src, lit(true)))
     }
-    val n = docs.count()
-    val posts = postingsOf(docs)
-    posts
-      .repartitionByRange(col("tok"))
-      .sortWithinPartitions("tok", "doc_id")
-      .write
-      .mode("overwrite")
-      .parquet(s"$indexPath/postings")
-    posts
-      .groupBy("tok")
-      .agg(count(lit(1)).as("df"))
-      .repartitionByRange(col("tok"))
-      .write
-      .mode("overwrite")
-      .parquet(s"$indexPath/vocab")
-    // v3: per-doc token mass — BM25's dl, derived from the postings so
-    // index and scan-time length definitions cannot fork
-    doclenOf(posts).write.mode("overwrite").parquet(s"$indexPath/doclen")
-    GramIndex.writeMeta(
-      s, indexPath,
-      Seq(GramIndex.stamp(dir), n.toString, FormatVersion,
-        excludeSource.getOrElse("")).mkString("\n"))
+    commit(s, dir, indexPath, excludeSource.getOrElse(""), docs.count(), postingsOf(docs))
   }
 
   /** One tokenize/count definition for build and absorb — the fit/apply
     * rule: the delta batch must enter the index through the exact
     * pipeline the corpus did. */
-  /** The doclen body: per-doc postings mass (= non-empty whitespace
-    * token count, [[TextAnalysis.searchBm25]]'s dl definition). */
-  private def doclenOf(posts: DataFrame): DataFrame =
-    posts.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-
   private def postingsOf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       .filter(length(col("tok")) > 0)
       .groupBy("tok", "doc_id")
       .agg(count(lit(1)).as("tf"))
+
+  /** Commit the three bodies derived from `posts`. vocab and doclen
+    * (per-doc token mass Σ tf — BM25's dl, derived from the postings so
+    * index and scan-time length definitions cannot fork) are linear
+    * passes over the postings, so an absorb's are rebuild-identical by
+    * the sum-merge argument. */
+  private def commit(
+      s: SparkSession,
+      dir: String,
+      indexPath: String,
+      binding: String,
+      n: Long,
+      posts: DataFrame): Unit =
+    Store.commit(s, store, dir, indexPath, binding, Map("n" -> n.toString))(
+      "postings" -> ((p: String) =>
+        posts.repartitionByRange(col("tok")).sortWithinPartitions("tok", "doc_id")
+          .write.mode("overwrite").parquet(p)),
+      "vocab" -> ((p: String) =>
+        posts.groupBy("tok").agg(count(lit(1)).as("df")).repartitionByRange(col("tok"))
+          .write.mode("overwrite").parquet(p)),
+      "doclen" -> ((p: String) =>
+        posts.groupBy("doc_id").agg(sum(col("tf")).as("dl")).write.mode("overwrite").parquet(p)))
 
   /** Fold the admitted batch (`source = oldDelta`) into the index — one
     * delta scan (source-equality pushed to the parquet scan) + one
@@ -110,73 +104,27 @@ object TextIndex {
     * row-identical to `build(..., excludeSource = Some(newDelta))` —
     * spec-pinned) — and re-bind the exclusion to `newDelta`. The corpus
     * text is never re-scanned; that is the point of keeping the index.
-    *
-    * Preconditions ([[GramIndex.absorb]]'s, loudly enforced): the index
-    * is fresh for `oldDelta` (a stale base would merge into the wrong
-    * corpus), and no `newDelta` rows exist yet (they would predate the
-    * base index's build and be missing from both sides of the merge
-    * while a rebuild would exclude them explicitly — absorb must run
-    * BEFORE the next crawl lands).
-    *
-    * Crash safety: meta deleted FIRST, bodies staged to `*_new` and
-    * swapped, meta rewritten LAST — a crash anywhere leaves a
-    * stale-by-stamp index the next consumer rebuilds. */
+    * Preconditions: [[Store.absorbable]]'s. */
   def absorb(
       s: SparkSession,
       dir: String,
       indexPath: String,
       oldDelta: String = GramIndex.DefaultDeltaSource,
       newDelta: String = "src20"): Unit = {
-    if (!isFresh(s, dir, indexPath, oldDelta))
-      throw new IllegalStateException(
-        s"absorb: text index at $indexPath is missing or stale for $dir " +
-          s"(excludeSource=$oldDelta)")
-    val docs = Tables.documents(s, dir)
-    if (docs.filter(col("source") === newDelta).limit(1).count() > 0)
-      throw new IllegalStateException(
-        s"absorb: table already holds '$newDelta' rows — absorb must run before the " +
-          "next batch lands (rebuild instead)")
-    val batch = docs.filter(col("source") === oldDelta)
-    val n = freshMeta(s, dir, indexPath, oldDelta).get + batch.count()
+    val meta = Store.absorbable(s, store, dir, indexPath, oldDelta, newDelta)
+    val batch = Tables.documents(s, dir).filter(col("source") === oldDelta)
+    val n = meta("n").toLong + batch.count()
     // persisted: the merge (delta tokenize + full postings read + sum
-    // aggregate) has TWO write consumers below — without the pin each
-    // write re-runs the whole lineage, doubling the cost the "one
-    // linear merge" contract advertises
+    // aggregate) has THREE write consumers — without the pin each write
+    // re-runs the whole lineage, tripling the cost the "one linear
+    // merge" contract advertises
     val merged = graft.sources.Tables.stableParquet(s, s"$indexPath/postings")
       .unionByName(postingsOf(batch))
       .groupBy("tok", "doc_id")
       .agg(sum(col("tf")).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val fs = GramIndex.metaPath(indexPath).getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(GramIndex.metaPath(indexPath), false)
-    try {
-      merged
-        .repartitionByRange(col("tok"))
-        .sortWithinPartitions("tok", "doc_id")
-        .write.mode("overwrite").parquet(s"$indexPath/postings_new")
-      merged
-        .groupBy("tok")
-        .agg(count(lit(1)).as("df"))
-        .repartitionByRange(col("tok"))
-        .write.mode("overwrite").parquet(s"$indexPath/vocab_new")
-      // v3: doclen re-derived from the merged postings — a linear pass
-      // over the store's own rows, rebuild-identical by the same
-      // sum-merge argument
-      doclenOf(merged).write.mode("overwrite").parquet(s"$indexPath/doclen_new")
-    } finally merged.unpersist(blocking = false)
-    def swap(name: String): Unit = {
-      val live = new org.apache.hadoop.fs.Path(s"$indexPath/$name")
-      val next = new org.apache.hadoop.fs.Path(s"$indexPath/${name}_new")
-      fs.delete(live, true)
-      if (!fs.rename(next, live))
-        throw new java.io.IOException(s"absorb: rename $next -> $live failed")
-    }
-    swap("postings")
-    swap("vocab")
-    swap("doclen")
-    GramIndex.writeMeta(
-      s, indexPath,
-      Seq(GramIndex.stamp(dir), n.toString, FormatVersion, newDelta).mkString("\n"))
+    try commit(s, dir, indexPath, newDelta, n, merged)
+    finally merged.unpersist(blocking = false)
   }
 
   private def freshMeta(
@@ -184,11 +132,14 @@ object TextIndex {
       dir: String,
       indexPath: String,
       excludeSource: String = ""): Option[Long] =
-    GramIndex.readMeta(s, indexPath).collect {
-      case lines
-          if lines.length >= 4 && lines(0) == GramIndex.stamp(dir) &&
-            lines(2) == FormatVersion && lines(3) == excludeSource =>
-        lines(1).toLong
+    Store.fresh(s, store, dir, indexPath, Some(excludeSource)).map(_("n").toLong)
+
+  /** The served index's doc count, building the index first when stale. */
+  private def docCount(s: SparkSession, dir: String, indexPath: String): Long =
+    freshMeta(s, dir, indexPath).getOrElse {
+      build(s, dir, indexPath)
+      freshMeta(s, dir, indexPath).getOrElse(
+        throw new IllegalStateException(s"TextIndex at $indexPath vanished mid-query"))
     }
 
   def isFresh(
@@ -210,9 +161,7 @@ object TextIndex {
     * identical — so the indexed path is hash-equal to the oracle, not
     * just approximately right. */
   def searchIndexed(s: SparkSession, dir: String, indexPath: String): DataFrame = {
-    if (!isFresh(s, dir, indexPath)) build(s, dir, indexPath)
-    val n = freshMeta(s, dir, indexPath).getOrElse(
-      throw new IllegalStateException(s"TextIndex at $indexPath vanished mid-query"))
+    val n = docCount(s, dir, indexPath)
     val terms = Seq("spark", "join", "stream")
     val dfMap = graft.sources.Tables.stableParquet(s, s"$indexPath/vocab")
       .filter(col("tok").isin(terms: _*))
@@ -259,9 +208,7 @@ object TextIndex {
     * the text). Row parity with the scan-time operator is spec-pinned —
     * dl is postings mass in both derivations by construction. */
   def searchBm25Indexed(s: SparkSession, dir: String, indexPath: String): DataFrame = {
-    if (!isFresh(s, dir, indexPath)) build(s, dir, indexPath)
-    val n = freshMeta(s, dir, indexPath).getOrElse(
-      throw new IllegalStateException(s"TextIndex at $indexPath vanished mid-query"))
+    val n = docCount(s, dir, indexPath)
     val terms = TextAnalysis.SearchTerms
     val dfMap = graft.sources.Tables.stableParquet(s, s"$indexPath/vocab")
       .filter(col("tok").isin(terms: _*))
@@ -292,7 +239,7 @@ object TextIndex {
   }
 
   private[graft] def defaultPath(s: SparkSession, dir: String): String =
-    CorpusOps.storePath(s, dir, "graft_text_index")
+    Store.path(s, dir, store)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "text_search_idx" -> ((s, d) => searchIndexed(s, d, defaultPath(s, d))),

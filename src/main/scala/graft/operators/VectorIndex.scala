@@ -26,9 +26,13 @@ import org.apache.spark.sql.functions._
   *   - `<path>/pqcodebook` (v2): the 2048-row `(sub_id, cid, sv, c, ns)`
   *     exact-integer subspace codebook the ADC distance tables are
   *     computed from.
-  *   - `<path>/meta`: freshness stamp + FORMAT VERSION carrying K and
-  *     the embedding dim, so a knob change can never serve a
-  *     mismatched index false-fresh ([[GramIndex]]'s convention).
+  *   - `<path>/rcentroids`, `lshbuckets`, `g0graph`, `g1graph`,
+  *     `nngraph`, `gentries`: the residual-PQ centroids, the LSH bucket
+  *     body and the graph-ANN bodies (see [[build]]).
+  *
+  * Stamp (of the embeddings table), meta, staged commit and freshness
+  * follow [[Store]]; the format version carries K and the embedding dim,
+  * so a knob change can never serve a mismatched index false-fresh.
   *
   * Serving ([[annIndexed]]) is [[Similarity.annIvf]]'s contract served
   * with ZERO embeddings scans when fresh: probes come from the shared
@@ -40,10 +44,6 @@ import org.apache.spark.sql.functions._
   * [[Similarity.ivfRescore]]. Store contents are the exact frames the
   * scan-time operator computes, so the indexed path answers hash-equal
   * to [[Similarity.annIvfSql]] — the same oracle, not a weaker one.
-  *
-  * Staleness/concurrency follow [[TextIndex]] verbatim: meta written
-  * LAST (crash mid-build ⇒ stale-by-stamp, next call rebuilds); builds
-  * racing readers of one path must serialize or stage-and-swap.
   */
 object VectorIndex {
 
@@ -69,8 +69,12 @@ object VectorIndex {
     s"v7:ivf16c:rpq8x${Similarity.PqK}r${Similarity.PqRounds}" +
       s":lsh6x4mp${graft.functions.LshProbes.Extra}:nn16s16b8h3:d${Similarity.embDim(s)}"
 
-  private[operators] def stamp(dir: String): String =
-    PipelineCache.sourceStamp(dir, "embeddings.parquet")
+  /** The binding is the exclusion bound ("" = none, the driver path). */
+  private[graft] val store = Store.Decl("vector_index", "graft_vector_index",
+    "embeddings.parquet",
+    Seq("vectors", "codebook", "rcentroids", "qsample", "pqcodes", "pqcodebook",
+      "lshbuckets", "g0graph", "g1graph", "nngraph", "gentries"),
+    Some(""))(formatVersion)
 
   /** Build (overwrite) the store at `path` from `dir`'s embeddings —
     * one [[Similarity.ivfCells]] pipeline (centroid + assignment passes),
@@ -88,24 +92,10 @@ object VectorIndex {
       dir: String,
       path: String,
       excludeFrom: Option[Long] = None): Unit = {
-    // invalidate meta FIRST (the CorpusProfile crash contract): a build
-    // clobbering a CURRENTLY-FRESH store (operational re-index, same
-    // stamp) that dies mid-write must not leave the old meta serving the
-    // half-written bodies false-fresh — meta-written-last alone only
-    // protects rebuilds that were themselves triggered by stamp drift
-    val mp = GramIndex.metaPath(path)
-    mp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(mp, false)
     val corpus = excludeFrom.foldLeft(Similarity.quantizedEmbeddings(s, dir)) {
       (df, from) => df.filter(col("vec_id") < from)
     }
     val (assigned, codebook) = Similarity.ivfCellsOf(corpus, 16)
-    graft.Sinks.ivfPartitioned(assigned, s"$path/vectors")
-    // store reads must never depend on the build session's frames: the
-    // codebook lands as its K struct rows (v6: + the seed-cell count `c`
-    // the residual encoding floor-divides by), re-collapsed at read time
-    Similarity.codebookRows(codebook)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/codebook")
     // v6: the rounded ASSIGNED-cell centroids the residual PQ bodies
     // subtract — persisted so warm IVF-ADC serving derives its query
     // residuals without any corpus (or vectors-body) pass; the default
@@ -114,16 +104,6 @@ object VectorIndex {
       case None => Similarity.ivfRcents(s, dir)
       case Some(_) => Similarity.roundedCentroids(Similarity.assignedCentRows(assigned))
     }
-    rcents.coalesce(1).write.mode("overwrite").parquet(s"$path/rcentroids")
-    // qsample derives from the build's own assigned frame (re-reading
-    // $path/vectors here would crash on an all-gate-rejected corpus —
-    // an empty partitionBy write has no readable schema) and stays a
-    // parallel write: at corpus scale the 1% sample is itself large
-    // (1 TB per 100 TB) — only the 16-row codebook coalesces
-    assigned
-      .filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("qv"), col("nq"))
-      .write.mode("overwrite").parquet(s"$path/qsample")
     // PQ artifacts (v2): the 8-byte-per-vector code rows land PARTITIONED
     // BY CELL like the vectors, so IVF-ADC serving prunes non-probed
     // cells at the reader; the 2048-row integer subspace codebook lands
@@ -152,12 +132,6 @@ object VectorIndex {
         (c, Similarity.pqCodes(Similarity.pqAssigned(sub, c)),
           assigned.select(col("vec_id"), col("cell")))
     }
-    pqCodesF
-      .join(cellsSlim, "vec_id")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/pqcodes")
-    pqCents
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/pqcodebook")
     // LSH bucket body (v3): every vector's 6 table buckets, PARTITIONED
     // BY (t, b) — 96 partitions — so a probe of a query batch's bucket
     // set prunes unmatched buckets at the READER (the cell-partitioning
@@ -165,7 +139,6 @@ object VectorIndex {
     // 96 partitions). Bucket values are a pure function of qv (no
     // learned state), which is what makes absorb's union exact.
     val bucketPairs = Similarity.lshBucketPairs(assigned, "vec_id")
-    bucketPairs.write.mode("overwrite").partitionBy("t", "b").parquet(s"$path/lshbuckets")
     // Graph-ANN bodies (v4): the LSH-seeded, NN-descent-refined corpus
     // kNN graph (nngraph) and the bounded deterministic walk entries
     // (gentries) — both PURE functions of the vector set, which is what
@@ -187,23 +160,50 @@ object VectorIndex {
         val g1 = pins.truncated(Similarity.nnRefine(g0, vecsSlim))
         (g0, g1, Similarity.nnRefine(g1, vecsSlim))
     }
-    try {
-      g0Frame.write.mode("overwrite").parquet(s"$path/g0graph")
-      g1Frame.write.mode("overwrite").parquet(s"$path/g1graph")
-      graph.write.mode("overwrite").parquet(s"$path/nngraph")
-      // v6 gentries: the IVF-cell medoids (the walk's geometry-aware
-      // entry points), derived from the build's own assignment/codebook
-      Similarity
-        .gEntriesOfAssigned(assigned, Similarity.codebookRows(codebook))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/gentries")
-    } finally pins.release()
-    // meta follows the house convention (stamp, info, version) plus the
-    // recorded batch exclusion ("" = none) so store_status reads all
-    // four stores with one shape
-    GramIndex.writeMeta(
-      s, path,
-      Seq(stamp(dir), "k=16", formatVersion(s),
-        excludeFrom.map(_.toString).getOrElse("")).mkString("\n"))
+    // store reads must never depend on the build session's frames: the
+    // codebook lands as its K struct rows (v6: + the seed-cell count `c`
+    // the residual encoding floor-divides by), re-collapsed at read time.
+    // qsample derives from the build's own assigned frame (re-reading
+    // $path/vectors here would crash on an all-gate-rejected corpus —
+    // an empty partitionBy write has no readable schema) and stays a
+    // parallel write: at corpus scale the 1% sample is itself large
+    // (1 TB per 100 TB) — only the 16-row codebook coalesces. v6
+    // gentries: the IVF-cell medoids (the walk's geometry-aware entry
+    // points), derived from the build's own assignment/codebook.
+    try commit(s, dir, path, excludeFrom,
+      "vectors" -> assigned,
+      "codebook" -> Similarity.codebookRows(codebook),
+      "rcentroids" -> rcents,
+      "qsample" -> assigned.filter(col("vec_id") % 100 === 0)
+        .select(col("vec_id").as("query_id"), col("qv"), col("nq")),
+      "pqcodes" -> pqCodesF.join(cellsSlim, "vec_id"),
+      "pqcodebook" -> pqCents,
+      "lshbuckets" -> bucketPairs,
+      "g0graph" -> g0Frame,
+      "g1graph" -> g1Frame,
+      "nngraph" -> graph,
+      "gentries" -> Similarity.gEntriesOfAssigned(assigned, Similarity.codebookRows(codebook)))
+    finally pins.release()
+  }
+
+  /** One staged commit for build and absorb; each body's layout
+    * (partition columns, or one file for the bounded bodies) is decided
+    * here once. */
+  private def commit(
+      s: SparkSession,
+      dir: String,
+      path: String,
+      excludeFrom: Option[Long],
+      bodies: (String, DataFrame)*): Unit = {
+    def write(body: String, df: DataFrame)(p: String): Unit = body match {
+      case "vectors" | "pqcodes" => df.write.mode("overwrite").partitionBy("cell").parquet(p)
+      case "lshbuckets" => df.write.mode("overwrite").partitionBy("t", "b").parquet(p)
+      case "codebook" | "rcentroids" | "pqcodebook" | "gentries" =>
+        df.coalesce(1).write.mode("overwrite").parquet(p)
+      case _ => df.write.mode("overwrite").parquet(p)
+    }
+    Store.commit(s, store, dir, path, excludeFrom.fold("")(_.toString))(
+      bodies.map { case (b, df) => b -> (write(b, df) _) }: _*)
   }
 
   /** Fold the admitted vector batch `[oldFrom, newFrom)` into the store
@@ -237,12 +237,7 @@ object VectorIndex {
     * excluded EVERYTHING at or past `oldFrom`, so rows ≥ `newFrom`
     * (whenever they land) are outside both the base store and the
     * absorbed result, and parity with a `newFrom` rebuild holds
-    * regardless.
-    *
-    * Crash safety: meta deleted FIRST, bodies staged to `*_new` and
-    * swapped, meta rewritten LAST — a crash anywhere leaves a
-    * stale-by-stamp (or stale-by-binding) store the next consumer
-    * rebuilds ([[GramIndex.absorb]] verbatim). */
+    * regardless. */
   def absorb(s: SparkSession, dir: String, path: String, oldFrom: Long, newFrom: Long): Unit = {
     require(oldFrom < newFrom, s"absorb: oldFrom $oldFrom must be < newFrom $newFrom")
     if (!isFresh(s, dir, path, Some(oldFrom)))
@@ -264,7 +259,6 @@ object VectorIndex {
     // centroids, graph splices) also sit behind a plan-truncation
     // barrier (see [[Similarity.Pins]])
     val pins = new Similarity.Pins
-    val fs = GramIndex.metaPath(path).getFileSystem(s.sparkContext.hadoopConfiguration)
     try {
       // merged IVF codebook: old seed sums/counts + delta seed sums/counts,
       // exact (both additive)
@@ -305,19 +299,6 @@ object VectorIndex {
       val newCodes = Similarity
         .pqCodes(Similarity.pqAssigned(Similarity.subspaceRows(resid, "vec_id", sd), mergedPq))
         .join(reassigned.select(col("vec_id"), col("cell")), "vec_id")
-      // stage every body (their plans READ the live bodies — overwrite in
-      // place would fail or corrupt), then swap; meta is already deleted
-      fs.delete(GramIndex.metaPath(path), false)
-      reassigned.write.mode("overwrite").partitionBy("cell").parquet(s"$path/vectors_new")
-      mergedCb.coalesce(1).write.mode("overwrite").parquet(s"$path/codebook_new")
-      graft.sources.Tables.stableParquet(s, s"$path/qsample")
-        .unionByName(
-          delta
-            .filter(col("vec_id") % 100 === 0)
-            .select(col("vec_id").as("query_id"), col("qv"), col("nq")))
-        .write.mode("overwrite").parquet(s"$path/qsample_new")
-      newCodes.write.mode("overwrite").partitionBy("cell").parquet(s"$path/pqcodes_new")
-      mergedPq.coalesce(1).write.mode("overwrite").parquet(s"$path/pqcodebook_new")
       // LSH buckets: old rows + the delta's — bucket values depend only
       // on qv, so the union is row-identical to a rebuild's derivation
       val oldLsh =
@@ -327,9 +308,6 @@ object VectorIndex {
           case _: org.apache.spark.sql.AnalysisException =>
             s.emptyDataset[(Long, Int, Int)].toDF("vec_id", "t", "b")
         }
-      oldLsh
-        .unionByName(Similarity.lshBucketPairs(delta, "vec_id"))
-        .write.mode("overwrite").partitionBy("t", "b").parquet(s"$path/lshbuckets_new")
       // graph-ANN bodies at O(delta) (r15, two-round since v6): the
       // stored seed graph is spliced — only touched buckets re-pair,
       // only affected srcs re-rank, only their in-neighbor pivots
@@ -347,25 +325,25 @@ object VectorIndex {
         allVecs,
         oldFrom,
         pins)
-      g0New.write.mode("overwrite").parquet(s"$path/g0graph_new")
-      g1New.write.mode("overwrite").parquet(s"$path/g1graph_new")
-      g2New.write.mode("overwrite").parquet(s"$path/nngraph_new")
-      rcents1.coalesce(1).write.mode("overwrite").parquet(s"$path/rcentroids_new")
-      Similarity.gEntriesOfAssigned(reassigned, mergedCb)
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/gentries_new")
+      // every body's plan READS the live bodies — the staged commit is
+      // what makes that safe
+      commit(s, dir, path, Some(newFrom),
+        "vectors" -> reassigned,
+        "codebook" -> mergedCb,
+        "rcentroids" -> rcents1,
+        "qsample" -> graft.sources.Tables.stableParquet(s, s"$path/qsample")
+          .unionByName(
+            delta
+              .filter(col("vec_id") % 100 === 0)
+              .select(col("vec_id").as("query_id"), col("qv"), col("nq"))),
+        "pqcodes" -> newCodes,
+        "pqcodebook" -> mergedPq,
+        "lshbuckets" -> oldLsh.unionByName(Similarity.lshBucketPairs(delta, "vec_id")),
+        "g0graph" -> g0New,
+        "g1graph" -> g1New,
+        "nngraph" -> g2New,
+        "gentries" -> Similarity.gEntriesOfAssigned(reassigned, mergedCb))
     } finally pins.release()
-    def swap(name: String): Unit = {
-      val live = new org.apache.hadoop.fs.Path(s"$path/$name")
-      val next = new org.apache.hadoop.fs.Path(s"$path/${name}_new")
-      fs.delete(live, true)
-      if (!fs.rename(next, live))
-        throw new java.io.IOException(s"absorb: rename $next -> $live failed")
-    }
-    Seq("vectors", "codebook", "rcentroids", "qsample", "pqcodes", "pqcodebook",
-      "lshbuckets", "g0graph", "g1graph", "nngraph", "gentries").foreach(swap)
-    GramIndex.writeMeta(
-      s, path,
-      Seq(stamp(dir), "k=16", formatVersion(s), newFrom.toString).mkString("\n"))
   }
 
   def isFresh(
@@ -373,9 +351,7 @@ object VectorIndex {
       dir: String,
       path: String,
       excludeFrom: Option[Long] = None): Boolean =
-    GramIndex.readMeta(s, path).exists(l =>
-      l.length >= 4 && l(0) == stamp(dir) && l(2) == formatVersion(s) &&
-        l(3) == excludeFrom.map(_.toString).getOrElse(""))
+    Store.fresh(s, store, dir, path, Some(excludeFrom.map(_.toString).getOrElse(""))).isDefined
 
   /** [[Similarity.annIvf]]'s exact contract served from the store (same
     * probes, same rescore, same oracle); zero embeddings scans when
@@ -576,7 +552,7 @@ object VectorIndex {
   }
 
   private[graft] def defaultPath(s: SparkSession, dir: String): String =
-    CorpusOps.storePath(s, dir, "graft_vector_index")
+    Store.path(s, dir, store)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ann_ivf_idx" -> ((s, d) => annIndexed(s, d, defaultPath(s, d))),

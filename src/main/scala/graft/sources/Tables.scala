@@ -45,19 +45,18 @@ object Tables {
   /** [[readStable]] generalized to ANY engine-managed parquet path —
     * persisted-store bodies included (a warm store query re-reads its
     * bodies every call, each read otherwise re-paying the inference
-    * job; the census pays one per body). The stamp walks the LOCAL
-    * filesystem: for a non-local path (object-store URI) the walk sees
-    * nothing and the read falls through uncached — correct, just
-    * unaccelerated. A store rebuild/absorb changes the file listing,
-    * flips the stamp, and re-infers. Partition-discovered columns
-    * (e.g. the IVF stores' `cell`) are part of the inferred schema and
-    * round-trip through the user-specified-schema read unchanged —
-    * PartitionFilters pruning still applies (spec-pinned by the store
-    * suites). */
+    * job; the census pays one per body). The key is the path's
+    * [[graft.operators.Store.stamp]], listed through the Hadoop
+    * FileSystem, so the cache works on any Hadoop filesystem URI; an
+    * absent path falls through to a plain read. A store rebuild/absorb
+    * changes the file listing, flips the stamp, and re-infers.
+    * Partition-discovered columns (e.g. the IVF stores' `cell`) are part
+    * of the inferred schema and round-trip through the user-specified-
+    * schema read unchanged — PartitionFilters pruning still applies
+    * (spec-pinned by the store suites). */
   def stableParquet(spark: SparkSession, path: String): DataFrame = {
-    val f = new java.io.File(path)
-    if (!f.exists()) return spark.read.parquet(path)
-    val stamp = graft.operators.PipelineCache.sourceStamp(f.getParent, f.getName)
+    val stamp = graft.operators.Store.stamp(spark, new org.apache.hadoop.fs.Path(path))
+    if (stamp.isEmpty) return spark.read.parquet(path)
     val schema = schemaCache.get(path) match {
       case (st, sch) if st == stamp => sch
       case _ =>
@@ -120,7 +119,7 @@ object Tables {
     // keying (not just stamping) by cores lets sessions with different
     // parallelism coexist instead of ping-ponging one slot
     val key = (s"$d/documents.parquet", cores)
-    val stamp = graft.operators.PipelineCache.sourceStamp(d, "documents.parquet")
+    val stamp = graft.operators.Store.stamp(spark, d, "documents.parquet")
     val underSplit = balanceCache.get(key) match {
       case (st, v) if st == stamp => v
       case _ =>

@@ -19,7 +19,7 @@ class CorpusOpsSpec extends GraftSpecBase {
     spark.conf.set("spark.graft.corpus.storeRoot", s"$tmp/stores")
     try {
       val s0 = CorpusOps.storeStatus(spark, dir).collect()
-      assert(s0.length == 22, s"expected 22 store bodies, got ${s0.length}")
+      assert(s0.length == 29, s"expected 29 store bodies, got ${s0.length}")
       assert(s0.forall(r => !r.getAs[Boolean]("present") && !r.getAs[Boolean]("fresh")),
         "nothing is built yet — all stores must report absent")
       graft.operators.TextIndex.build(
@@ -625,8 +625,7 @@ class CorpusOpsSpec extends GraftSpecBase {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     def vocab(p: String) = spark.read.parquet(s"$p/vocab").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
-    def metaN(p: String) =
-      java.nio.file.Files.readString(java.nio.file.Paths.get(s"$p/meta")).split("\n")(1)
+    def metaN(p: String) = graft.operators.Store.readMeta(spark, p).get("n")
     assert(posts(s"$base/idxA") == posts(s"$base/idxB"),
       "absorbed postings diverge from a rebuild")
     assert(vocab(s"$base/idxA") == vocab(s"$base/idxB"),

@@ -97,7 +97,7 @@ class SinksSpec extends GraftSpecBase {
     Sinks.upsertParquet(spark, dir, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "id")
     // simulate a crash BETWEEN the two renames: target moved to .old,
     // staging never promoted — no live store remains
-    Sinks.mustRename(new java.io.File(dir), new java.io.File(dir + ".old"))
+    Files.move(java.nio.file.Paths.get(dir), java.nio.file.Paths.get(dir + ".old"))
     Sinks.upsertParquet(spark, dir, Seq((3L, "c")).toDF("id", "v"), "id")
     val out = spark.read.parquet(dir).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out == Map(1L -> "a", 2L -> "b", 3L -> "c"),
@@ -118,8 +118,10 @@ class SinksSpec extends GraftSpecBase {
 
   test("a failed rename raises instead of returning silently") {
     val dir = Files.createTempDirectory("graft_sink").toString
+    val src = new org.apache.hadoop.fs.Path(s"$dir/does_not_exist")
     val e = intercept[java.io.IOException] {
-      Sinks.mustRename(new java.io.File(s"$dir/does_not_exist"), new java.io.File(s"$dir/dst"))
+      graft.operators.Store.rename(
+        graft.operators.Store.fs(spark, src), src, new org.apache.hadoop.fs.Path(s"$dir/dst"))
     }
     assert(e.getMessage.contains("rename"), s"unhelpful error: ${e.getMessage}")
   }

@@ -176,7 +176,7 @@ class VectorIndexSpec extends GraftSpecBase {
       VectorIndex.build(spark, sfDir, path)
       // simulate a store persisted by the pre-PQ build: v1 meta line
       val v1 = Seq(
-        graft.operators.PipelineCache.sourceStamp(sfDir, "embeddings.parquet"),
+        graft.operators.Store.stamp(spark, sfDir, "embeddings.parquet"),
         "k=16",
         s"v1:ivf16:d${Similarity.embDim(spark)}").mkString("\n")
       // drop the Hadoop checksum sidecar before the direct overwrite —
@@ -200,7 +200,7 @@ class VectorIndexSpec extends GraftSpecBase {
       // codebooks, no rcentroids/g1graph bodies — serving it false-fresh
       // would answer residual query tables against raw codebooks
       val v5 = Seq(
-        graft.operators.PipelineCache.sourceStamp(sfDir, "embeddings.parquet"),
+        graft.operators.Store.stamp(spark, sfDir, "embeddings.parquet"),
         "k=16",
         s"v5:ivf16:pq8x16:lsh6x4:nn8:d${Similarity.embDim(spark)}",
         "").mkString("\n")

@@ -2512,15 +2512,11 @@ object Similarity {
     * it, and the walk cannot navigate to a query's true neighbors (the
     * measured 5-16% recall). Strides 1..16 give each node long-range
     * links (a skip-list per bucket — the small-world shortcut structure
-    * NN-descent's random initialization provides in the literature),
-    * while keeping the absorb splice's append-only argument intact: a
-    * delta id still only lands in the windows of the last
-    * [[NnSeedWidth]] = max-stride established members. Every node's
-    * candidate degree is bounded at 2·6·\|strides\|, so the ranking
-    * window sorts O(1) rows per src at any corpus size. */
+    * NN-descent's random initialization provides in the literature).
+    * Every node's candidate degree is bounded at 2·6·\|strides\|, so the
+    * ranking window sorts O(1) rows per src at any corpus size. */
   private[operators] val NnGraphDegree = 16
   private[operators] val NnSeedStrides: Seq[Int] = Seq(1, 2, 4, 8, 16)
-  private[operators] val NnSeedWidth = 16
   // beam 8, 3 hops (r15 verdict #2): the r14 beam-4 2-hop walk scored
   // ≤ 16 + 2·4·8 candidates per query and measured 5-13% recall@5; the
   // r16 walk scores ≤ 16 + 3·8·16 rows — still bounded per query at any
@@ -2628,7 +2624,7 @@ object Similarity {
     * of eager literals because a hop frame is data, not a scalar). The
     * tag prefix must identify the GRAPH being walked, not just the
     * corpus — the store path folds its MD5 digest in
-    * ([[VectorIndex.annGraphIndexed]], the ivfProbesCached rule) so two
+    * ([[VectorIndex.annGraphIndexed]], the store probe-cache rule) so two
     * stores of one corpus can never serve each other's frontiers. */
   private[operators] def graphWalk(
       graph: DataFrame,
@@ -2714,19 +2710,20 @@ object Similarity {
   }
 
   /** Lifetime of ONE-SHOT persisted frames (no stamp, no cache entry —
-    * [[VectorIndex.absorb]]'s staged bodies, an exclusion build's graph
-    * stages): `apply` persists a frame and records it, `truncated` also
-    * returns it rebuilt on the persisted RDD — [[cachedTruncated]]'s
-    * plan-truncation barrier — and `release` unpersists everything
-    * recorded. The barrier matters for chained splices: a persisted
-    * frame's cached plan is carried (and rendered as a string on every
-    * AQE stage update) inside each consumer's plan, so without it the
-    * seed → refine → refine splice's plan grew multiplicatively —
-    * measured at sf0.001 on 4 CPUs, `absorb(400 → 1000)` spent ~320 of
-    * its 386 s on the driver between jobs; behind the barrier it takes
-    * ~25 s. Like [[cachedTruncated]], truncate graph- or id-grain
-    * frames, not corpus-sized vector frames (the RDD boundary re-encodes
-    * rows on every read). */
+    * [[VectorIndex.absorb]]'s staged bodies, the graph stages of an
+    * exclusion build or an absorb): `apply` persists a frame and records
+    * it, `truncated` also returns it rebuilt on the persisted RDD —
+    * [[cachedTruncated]]'s plan-truncation barrier — and `release`
+    * unpersists everything recorded. The barrier matters for chained
+    * graph stages: a persisted frame's cached plan is carried (and
+    * rendered as a string on every AQE stage update) inside each
+    * consumer's plan, so without it a seed → refine → refine chain's
+    * plan grows multiplicatively — measured at sf0.001 on 4 CPUs, an
+    * `absorb(400 → 1000)` that chained its graph stages unbarriered
+    * spent ~320 of its 386 s on the driver between jobs; behind the
+    * barrier it took ~25 s. Like [[cachedTruncated]], truncate graph- or
+    * id-grain frames, not corpus-sized vector frames (the RDD boundary
+    * re-encodes rows on every read). */
   private[graft] final class Pins {
     private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def apply(df: DataFrame): DataFrame = {
@@ -2741,144 +2738,12 @@ object Similarity {
     def release(): Unit = held.foreach(_.unpersist(blocking = false))
   }
 
-  /** The stamp-cached SEED graph (the refine stage's input), exposed so
-    * [[VectorIndex.build]]'s default path can persist it as the v5
-    * `g0graph` body without a second construction. */
-  private[graft] def nnG0Cached(s: SparkSession, dir: String): DataFrame = {
+  /** The stamp-cached SEED graph — the first refine round's input. */
+  private def nnG0Cached(s: SparkSession, dir: String): DataFrame = {
     val corpus = quantized(s, dir)
     val vecs = corpus.select(col("vec_id"), col("qv"), col("nq"))
     cachedTruncated(s"nn_g0_d${embDim(s)}", s, dir)(
       nnSeedGraph(lshBucketPairs(corpus, "vec_id"), vecs))
-  }
-
-  /** O(delta) NN-graph maintenance (r14 verdict #6) — fold an absorbed
-    * vector batch into the stored seed + refined graphs WITHOUT
-    * regenerating either from the merged corpus, row-identical to a
-    * rebuild (the absorb parity spec pins it):
-    *
-    *  1. '''Seed delta.''' Delta ids are all ≥ `oldFrom` (the range
-    *     convention), so they append at the END of every bucket's
-    *     vec_id order: the only windows that change are the delta
-    *     members' own and the last [[NnSeedWidth]] ESTABLISHED members'
-    *     of each touched bucket. Window-pair exactly (those tails ∪
-    *     delta) per touched bucket, keep pairs whose later member is a
-    *     delta id — every other seed pair is untouched by construction.
-    *  2. '''Seed re-rank is monotone.''' g0(src) is the top-K of src's
-    *     candidate set; the delta only ADDS candidates, so
-    *     g0'(src) = top-K(stored g0 rows of src ∪ new scored pairs) for
-    *     affected srcs A, and the stored rows verbatim otherwise — no
-    *     discarded candidate can re-enter a grown set.
-    *  3. '''Refine re-rank set.''' A pivot's wedge set depends only on
-    *     its out-edges, so only pivots in A propose differently; their
-    *     old AND new out-neighbors T are the only possible targets of
-    *     changed proposals. S = A ∪ T is re-ranked from full inputs:
-    *     g0'(S) ∪ every proposal targeting S, whose proposers are
-    *     exactly the g0' in-neighbors of S (one linear pass over the
-    *     16-byte g0' rows — the accepted slim-body cost — with all
-    *     recomputed wedge/score work ∝ |S|·K²). Rows with src ∉ S are
-    *     the stored refined rows verbatim.
-    *
-    * With TWO refine rounds (r15 verdict #2) step 3 chains: the first
-    * splice returns its re-ranked set S₁, which is exactly the set of
-    * srcs whose g1 rows may differ — so the second round's splice is the
-    * SAME argument with (oldIn, newIn, changed) = (stored g1, spliced
-    * g1', S₁). Affected sets grow one out-neighborhood per round but
-    * stay delta-proportional (≤ \|S₁\|·(1+K) ids).
-    *
-    * Returns (g0', g1', g2'); g0', g1' and the affected-id sets are
-    * held in `pins` (each feeds its own body write and the next round's
-    * recompute, behind a plan-truncation barrier) — the caller releases
-    * them. */
-  private[graft] def nnGraphDelta(
-      oldG0: DataFrame,
-      oldG1: DataFrame,
-      oldG2: DataFrame,
-      oldLsh: DataFrame,
-      deltaPairs: DataFrame,
-      vecs: DataFrame,
-      oldFrom: Long,
-      pins: Pins): (DataFrame, DataFrame, DataFrame) = {
-    def score(pairs: DataFrame): DataFrame = pairs
-      .join(vecs.select(col("vec_id").as("a"), col("qv").as("qa"), col("nq").as("na")), "a")
-      .join(vecs.select(col("vec_id").as("b"), col("qv").as("qb"), col("nq").as("nb")), "b")
-      .select(
-        col("a").as("src"),
-        col("b").as("dst"),
-        graft.functions.VectorOps.cosine(col("qa"), col("na"), col("qb"), col("nb")).as("cos_sim"))
-    val wS = Window.partitionBy("src").orderBy(col("cos_sim").desc, col("dst"))
-    def topK(df: DataFrame): DataFrame = df
-      .groupBy("src", "dst")
-      .agg(max(col("cos_sim")).as("cos_sim"))
-      .withColumn("rk", row_number().over(wS))
-      .filter(col("rk") <= NnGraphDegree)
-      .drop("rk")
-    // 1. touched buckets, their established tails, the new window pairs
-    val tb = deltaPairs.select("t", "b").distinct()
-    val wTail = Window.partitionBy("t", "b").orderBy(col("vec_id").desc)
-    val tails = oldLsh
-      .join(broadcast(tb), Seq("t", "b"))
-      .withColumn("rn", row_number().over(wTail))
-      .filter(col("rn") <= NnSeedWidth)
-      .select("vec_id", "t", "b")
-    val wB = Window.partitionBy("t", "b").orderBy("vec_id")
-    val newSeeds = tails
-      .unionByName(deltaPairs.select("vec_id", "t", "b"))
-      .select(
-        col("vec_id"),
-        array(NnSeedStrides.map(j => lead(col("vec_id"), j).over(wB)): _*).as("nbrs"))
-      .select(col("vec_id").as("a"), explode(col("nbrs")).as("nb"))
-      .filter(col("nb").isNotNull && col("nb") >= oldFrom)
-    // delta-bounded; recomputation from the bounded window is cheaper
-    // than managing another persist hand-off across the staged writes
-    val scoredNew = score(
-      newSeeds.select(col("a"), col("nb").as("b"))
-        .unionByName(newSeeds.select(col("nb").as("a"), col("a").as("b")))
-        .distinct())
-    // 2. affected srcs re-ranked over (stored rows ∪ new pairs)
-    val aSrcs = pins.truncated(scoredNew.select("src").distinct())
-    val g0New = pins.truncated(oldG0
-      .join(broadcast(aSrcs), Seq("src"), "left_anti")
-      .unionByName(topK(oldG0.join(broadcast(aSrcs), Seq("src")).unionByName(scoredNew))))
-    // 3. one refine round spliced: re-rank set S = changed ∪ out_old ∪
-    // out_new (the only possible targets of changed proposals), pivots =
-    // newIn in-neighbors of S (the only possible proposers), everything
-    // else verbatim; returns S so the next round can chain
-    def refineDelta(
-        oldOut: DataFrame,
-        oldIn: DataFrame,
-        newIn: DataFrame,
-        changed: DataFrame): (DataFrame, DataFrame) = {
-      val sSet = pins.truncated(changed
-        .select(col("src").as("id"))
-        .unionByName(oldIn.join(broadcast(changed), Seq("src")).select(col("dst").as("id")))
-        .unionByName(newIn.join(broadcast(changed), Seq("src")).select(col("dst").as("id")))
-        .distinct())
-      val pivots = newIn
-        .join(broadcast(sSet.select(col("id").as("dst"))), Seq("dst"))
-        .select("src")
-        .distinct()
-      val pg = newIn.join(broadcast(pivots), Seq("src"))
-      val wedges = pg
-        .select(col("src").as("u"), col("dst").as("wa"))
-        .join(pg.select(col("src").as("u"), col("dst").as("wb")), Seq("u"))
-        .filter(col("wa") < col("wb"))
-        .select("wa", "wb")
-        .distinct()
-      val wScored = score(wedges.select(col("wa").as("a"), col("wb").as("b")))
-      val props = wScored
-        .unionByName(wScored.select(col("dst").as("src"), col("src").as("dst"), col("cos_sim")))
-        .join(broadcast(sSet.select(col("id").as("src"))), Seq("src"))
-      val out = oldOut
-        .join(broadcast(sSet.select(col("id").as("src"))), Seq("src"), "left_anti")
-        .unionByName(
-          topK(newIn.join(broadcast(sSet.select(col("id").as("src"))), Seq("src"))
-            .unionByName(props)))
-      (out, sSet.select(col("id").as("src")))
-    }
-    val (g1Out, s1) = refineDelta(oldG1, oldG0, g0New, aSrcs)
-    val g1New = pins.truncated(g1Out)
-    val (g2New, _) = refineDelta(oldG2, oldG1, g1New, s1)
-    (g0New, g1New, g2New)
   }
 
   /** The corpus NN-graph — STORE-BACKED BY DEFAULT (r14 verdict #1, the
@@ -2890,9 +2755,9 @@ object Similarity {
     * pass read 16-byte rows from disk instead of re-running the
     * seed + refine pipeline per pass. On a stale/absent store the
     * scan-time construction below runs, stamp-cached in three stages
-    * (seed graph + two NN-descent refine rounds — r15 verdict #2) so
-    * all consumers still share ONE build per source stamp (shared_cache
-    * disclosure) — and
+    * (seed graph + two NN-descent refine rounds — r15 verdict #2, each
+    * stage behind a plan-truncation barrier) so all consumers still
+    * share ONE build per source stamp (shared_cache disclosure) — and
     * [[VectorIndex.build]]'s default path persists exactly that cached
     * frame (a rebuild of a fresh store reads the live body, which its
     * staged [[Store.commit]] replaces only after every body is written). */
@@ -2911,10 +2776,8 @@ object Similarity {
   }
 
   /** The FIRST refine round's graph, stamp-cached — the second round's
-    * input and the store's `g1graph` body ([[nnGraphDelta]]'s two-stage
-    * splice needs the intermediate state persisted, exactly like the
-    * seed graph). */
-  private[graft] def nnG1Cached(s: SparkSession, dir: String): DataFrame = {
+    * input. */
+  private def nnG1Cached(s: SparkSession, dir: String): DataFrame = {
     val vecs = quantized(s, dir).select(col("vec_id"), col("qv"), col("nq"))
     cachedTruncated(s"nn_g1_d${embDim(s)}", s, dir)(
       nnRefine(nnG0Cached(s, dir), vecs))

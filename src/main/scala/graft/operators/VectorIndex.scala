@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
   *   - `<path>/pqcodebook` (v2): the 2048-row `(sub_id, cid, sv, c, ns)`
   *     exact-integer subspace codebook the ADC distance tables are
   *     computed from.
-  *   - `<path>/rcentroids`, `lshbuckets`, `g0graph`, `g1graph`,
-  *     `nngraph`, `gentries`: the residual-PQ centroids, the LSH bucket
-  *     body and the graph-ANN bodies (see [[build]]).
+  *   - `<path>/rcentroids`, `lshbuckets`, `nngraph`, `gentries`: the
+  *     residual-PQ centroids, the LSH bucket body and the graph-ANN
+  *     bodies (see [[build]]).
   *
   * Stamp (of the embeddings table), meta, staged commit and freshness
   * follow [[Store]]; the format version carries K and the embedding dim,
@@ -49,7 +49,7 @@ object VectorIndex {
 
   /** v2 added the PQ artifacts (pqcodes/pqcodebook); v3 added the LSH
     * bucket body (lshbuckets); v4 added the graph-ANN bodies (nngraph +
-    * gentries); v5 added the SEED graph body (g0graph) that makes
+    * gentries); v5 added the SEED graph body (g0graph) that made
     * [[absorb]]'s O(delta) graph maintenance possible; v6 (r15 verdict
     * #1/#2) RE-DEFINES three artifact families — the codebook body
     * carries the seed-cell count `c`, pqcodes/pqcodebook encode IVF
@@ -59,21 +59,23 @@ object VectorIndex {
     * the walk beam is 8; v7 (r16 verdict #1) widens the PQ subspace
     * codebooks 16 → 256 cells with four Lloyd refinement rounds
     * (`rpq8x256r4` — a v6 pqcodebook would serve 4-bit codes against
-    * 8-bit query tables) — an older store is stale-by-version and
-    * rebuilds, never serves a warm path with missing or
+    * 8-bit query tables); v8 drops the g0graph/g1graph stage bodies
+    * (absorb regenerates the graph from the store's own rows instead of
+    * splicing the stored stages) — an older store is stale-by-version
+    * and rebuilds, never serves a warm path with missing or
     * differently-defined bodies. */
   private[operators] def formatVersion(s: SparkSession): String =
     // rpq/lsh segments INTERPOLATE their constants (r17 review): a PqK /
     // PqRounds / probe-fan-out retune must flip the version by itself —
     // a hand-maintained literal would let an old store serve false-fresh
-    s"v7:ivf16c:rpq8x${Similarity.PqK}r${Similarity.PqRounds}" +
+    s"v8:ivf16c:rpq8x${Similarity.PqK}r${Similarity.PqRounds}" +
       s":lsh6x4mp${graft.functions.LshProbes.Extra}:nn16s16b8h3:d${Similarity.embDim(s)}"
 
   /** The binding is the exclusion bound ("" = none, the driver path). */
   private[graft] val store = Store.Decl("vector_index", "graft_vector_index",
     "embeddings.parquet",
     Seq("vectors", "codebook", "rcentroids", "qsample", "pqcodes", "pqcodebook",
-      "lshbuckets", "g0graph", "g1graph", "nngraph", "gentries"),
+      "lshbuckets", "nngraph", "gentries"),
     Some(""))(formatVersion)
 
   /** Build (overwrite) the store at `path` from `dir`'s embeddings —
@@ -104,34 +106,8 @@ object VectorIndex {
       case None => Similarity.ivfRcents(s, dir)
       case Some(_) => Similarity.roundedCentroids(Similarity.assignedCentRows(assigned))
     }
-    // PQ artifacts (v2): the 8-byte-per-vector code rows land PARTITIONED
-    // BY CELL like the vectors, so IVF-ADC serving prunes non-probed
-    // cells at the reader; the 2048-row integer subspace codebook lands
-    // beside them. On the default (no-exclusion) path the cell join
-    // rides the stamp-cached slim assignment (the same frame
-    // ann_ivfpq_topk / dedup_embedding_ivf share) and pqFrames is the
-    // stamp-cached pair the live PQ queries use — a build right after a
-    // live query re-reads both caches instead of re-scanning the corpus;
-    // an exclusion build derives both from its own filtered corpus (the
-    // caches hold full-corpus frames and must not leak into it).
-    val sd = Similarity.embDim(s) / 8
     require(Similarity.embDim(s) % 8 == 0,
       s"VectorIndex PQ bodies need dim % 8 == 0, got ${Similarity.embDim(s)}")
-    val (pqCents, pqCodesF, cellsSlim) = excludeFrom match {
-      case None =>
-        // default path rides the same stamp-cached codebook + code pivot
-        // the live PQ queries share (r18: pq_codes joined the cache set)
-        val (c, _) = Similarity.pqFrames(s, dir)
-        (c, Similarity.pqCodesCached(s, dir), Similarity.ivfCellsSlimCached(s, dir))
-      case Some(_) =>
-        // v6: the PQ bodies encode IVF RESIDUALS — the exclusion build
-        // derives them from its own filtered corpus's assignment
-        val resid = Similarity.residualOf(assigned, rcents, "vec_id")
-        val sub = Similarity.subspaceRows(resid, "vec_id", sd)
-        val c = Similarity.pqCentroids(sub)
-        (c, Similarity.pqCodes(Similarity.pqAssigned(sub, c)),
-          assigned.select(col("vec_id"), col("cell")))
-    }
     // LSH bucket body (v3): every vector's 6 table buckets, PARTITIONED
     // BY (t, b) — 96 partitions — so a probe of a query batch's bucket
     // set prunes unmatched buckets at the READER (the cell-partitioning
@@ -139,51 +115,78 @@ object VectorIndex {
     // 96 partitions). Bucket values are a pure function of qv (no
     // learned state), which is what makes absorb's union exact.
     val bucketPairs = Similarity.lshBucketPairs(assigned, "vec_id")
-    // Graph-ANN bodies (v4): the LSH-seeded, NN-descent-refined corpus
-    // kNN graph (nngraph) and the bounded deterministic walk entries
-    // (gentries) — both PURE functions of the vector set, which is what
-    // makes absorb's regeneration exact. The default path rides the same
-    // stamp-cached construction the scan-time ann_graph_topk uses
-    // (shared_cache); an exclusion build derives from its own filtered
-    // frames with one-shot local pins behind a plan-truncation barrier.
-    val vecsSlim = assigned.select(col("vec_id"), col("qv"), col("nq"))
     val pins = new Similarity.Pins
-    // the SEED graph and the FIRST refine round land as their own bodies
-    // (v5/v6): [[absorb]]'s O(delta) maintenance needs each refine
-    // stage's INPUT, not just the final output
-    val (g0Frame, g1Frame, graph) = excludeFrom match {
-      case None =>
-        (Similarity.nnG0Cached(s, dir), Similarity.nnG1Cached(s, dir),
-          Similarity.nnGraphCached(s, dir))
-      case Some(_) =>
-        val g0 = pins.truncated(Similarity.nnSeedGraph(bucketPairs, vecsSlim))
-        val g1 = pins.truncated(Similarity.nnRefine(g0, vecsSlim))
-        (g0, g1, Similarity.nnRefine(g1, vecsSlim))
-    }
-    // store reads must never depend on the build session's frames: the
-    // codebook lands as its K struct rows (v6: + the seed-cell count `c`
-    // the residual encoding floor-divides by), re-collapsed at read time.
-    // qsample derives from the build's own assigned frame (re-reading
-    // $path/vectors here would crash on an all-gate-rejected corpus —
-    // an empty partitionBy write has no readable schema) and stays a
-    // parallel write: at corpus scale the 1% sample is itself large
-    // (1 TB per 100 TB) — only the 16-row codebook coalesces. v6
-    // gentries: the IVF-cell medoids (the walk's geometry-aware entry
-    // points), derived from the build's own assignment/codebook.
-    try commit(s, dir, path, excludeFrom,
-      "vectors" -> assigned,
-      "codebook" -> Similarity.codebookRows(codebook),
-      "rcentroids" -> rcents,
-      "qsample" -> assigned.filter(col("vec_id") % 100 === 0)
-        .select(col("vec_id").as("query_id"), col("qv"), col("nq")),
-      "pqcodes" -> pqCodesF.join(cellsSlim, "vec_id"),
-      "pqcodebook" -> pqCents,
-      "lshbuckets" -> bucketPairs,
-      "g0graph" -> g0Frame,
-      "g1graph" -> g1Frame,
-      "nngraph" -> graph,
-      "gentries" -> Similarity.gEntriesOfAssigned(assigned, Similarity.codebookRows(codebook)))
-    finally pins.release()
+    try {
+      // PQ and graph bodies: the default (no-exclusion) path rides the
+      // stamp-cached frames the live queries share — the slim cell
+      // assignment (ann_ivfpq_topk / dedup_embedding_ivf), the pqFrames
+      // codebook + code pivot and the scan-time ann_graph_topk's graph —
+      // so a build right after a live query re-reads those caches instead
+      // of re-scanning the corpus; an exclusion build derives them from
+      // its own filtered corpus (the caches hold full-corpus frames and
+      // must not leak into it) through the derivation absorb also uses
+      val (pqCents, pqCodes, graph) = excludeFrom match {
+        case None =>
+          val (c, _) = Similarity.pqFrames(s, dir)
+          (c, Similarity.pqCodesCached(s, dir).join(Similarity.ivfCellsSlimCached(s, dir), "vec_id"),
+            Similarity.nnGraphCached(s, dir))
+        case Some(_) => derivedBodies(assigned, rcents, bucketPairs, pins)
+      }
+      // store reads must never depend on the build session's frames: the
+      // codebook lands as its K struct rows (v6: + the seed-cell count `c`
+      // the residual encoding floor-divides by), re-collapsed at read time.
+      // qsample derives from the build's own assigned frame (re-reading
+      // $path/vectors here would crash on an all-gate-rejected corpus —
+      // an empty partitionBy write has no readable schema) and stays a
+      // parallel write: at corpus scale the 1% sample is itself large
+      // (1 TB per 100 TB) — only the 16-row codebook coalesces. v6
+      // gentries: the IVF-cell medoids (the walk's geometry-aware entry
+      // points), derived from the build's own assignment/codebook.
+      commit(s, dir, path, excludeFrom,
+        "vectors" -> assigned,
+        "codebook" -> Similarity.codebookRows(codebook),
+        "rcentroids" -> rcents,
+        "qsample" -> assigned.filter(col("vec_id") % 100 === 0)
+          .select(col("vec_id").as("query_id"), col("qv"), col("nq")),
+        "pqcodes" -> pqCodes,
+        "pqcodebook" -> pqCents,
+        "lshbuckets" -> bucketPairs,
+        "nngraph" -> graph,
+        "gentries" -> Similarity.gEntriesOfAssigned(assigned, Similarity.codebookRows(codebook)))
+    } finally pins.release()
+  }
+
+  /** The `(pqcodebook, pqcodes, nngraph)` bodies of an assigned vector
+    * frame `(vec_id, qv, nq, cell)` — the one derivation the exclusion
+    * [[build]] and [[absorb]] share, so an absorbed store equals a
+    * rebuild by construction whenever the inputs are row-identical.
+    *
+    *   - PQ (v2, residual since v6): the 8-byte-per-vector code rows
+    *     (joined to their cell — the body lands PARTITIONED BY CELL like
+    *     the vectors, so IVF-ADC serving prunes non-probed cells at the
+    *     reader) and the integer subspace codebook, both over the IVF
+    *     residuals against `rcents`.
+    *   - Graph (v4): the LSH-seeded kNN graph over `bucketPairs`, refined
+    *     by two NN-descent rounds — a PURE function of the vector set.
+    *     Each stage's input sits behind a plan-truncation barrier in
+    *     `pins` (see [[Similarity.Pins]]); the caller releases them. */
+  private def derivedBodies(
+      assigned: DataFrame,
+      rcents: DataFrame,
+      bucketPairs: DataFrame,
+      pins: Similarity.Pins): (DataFrame, DataFrame, DataFrame) = {
+    // the Lloyd rounds and the encode pass each read the subspace rows
+    val sub = pins(Similarity.subspaceRows(
+      Similarity.residualOf(assigned, rcents, "vec_id"),
+      "vec_id", Similarity.embDim(assigned.sparkSession) / 8))
+    // trained eagerly on the driver: a local frame, nothing to pin
+    val pqCents = Similarity.pqCentroids(sub)
+    val pqCodes = Similarity.pqCodes(Similarity.pqAssigned(sub, pqCents))
+      .join(assigned.select(col("vec_id"), col("cell")), "vec_id")
+    val vecs = assigned.select(col("vec_id"), col("qv"), col("nq"))
+    val g0 = pins.truncated(Similarity.nnSeedGraph(bucketPairs, vecs))
+    val g1 = pins.truncated(Similarity.nnRefine(g0, vecs))
+    (pqCents, pqCodes, Similarity.nnRefine(g1, vecs))
   }
 
   /** One staged commit for build and absorb; each body's layout
@@ -211,7 +214,7 @@ object VectorIndex {
     * between-crawls maintenance contract on the vector side: ONE
     * delta-range scan of the embeddings table (the vec_id bound is a
     * pushed parquet filter — row groups past the corpus prune on
-    * min/max stats) plus a LINEAR pass over the store's own bodies; the
+    * min/max stats) plus LINEAR passes over the store's own bodies; the
     * established corpus's float vectors are never re-read from the
     * source table.
     *
@@ -219,18 +222,17 @@ object VectorIndex {
     * `build(..., excludeFrom = Some(newFrom))`): every stored artifact
     * is an exact integer. Seed-cell centroid sums AND counts are
     * additive — old `(cv, c)` + the delta's seed sums equal a rebuild's
-    * bit-for-bit — and re-assignment / re-coding against the merged
-    * codebook reads (qv, nq) back from the store losslessly. The v6
-    * RESIDUAL PQ bodies are NOT additive (the rounded centroid moves
-    * with the merged sums, so every established vector's residual
-    * changes): they are recomputed from the merged residual view — a
-    * linear pass over the store's own slim rows, never the source
-    * table, and identical to a rebuild's derivation by construction.
-    * The other unavoidable linear cost is re-assigning EVERY vector
-    * (new centroids can flip any vector's argmax cell — the honest
-    * price of exact parity; an approximate deployment that pins old
-    * assignments trades that for drift), but that pass too is over the
-    * store's slim rows.
+    * bit-for-bit — re-assignment against the merged codebook reads
+    * (qv, nq) back from the store losslessly, and LSH bucket values
+    * depend only on qv, so the stored buckets plus the delta's equal a
+    * rebuild's. Re-assigning EVERY vector is unavoidable (new centroids
+    * can flip any vector's argmax cell — the honest price of exact
+    * parity; an approximate deployment that pins old assignments trades
+    * that for drift). The residual PQ bodies and the graph are not
+    * additive (the rounded centroids move with the merged sums; a new
+    * vector can enter any neighborhood), so they are REGENERATED from
+    * those store rows by the exclusion build's own derivation
+    * ([[derivedBodies]]) — linear in the store, never the source table.
     *
     * Unlike the source-label convention, the RANGE convention needs no
     * "next batch already landed" guard: `build(excludeFrom=oldFrom)`
@@ -256,8 +258,8 @@ object VectorIndex {
     // pass over the store) and the merged codebook re-run once per
     // consumer — the recomputation class the pqFrames cache fixed,
     // applied to the one-shot absorb. Bounded-grain frames (codebook,
-    // centroids, graph splices) also sit behind a plan-truncation
-    // barrier (see [[Similarity.Pins]])
+    // centroids) also sit behind a plan-truncation barrier (see
+    // [[Similarity.Pins]])
     val pins = new Similarity.Pins
     try {
       // merged IVF codebook: old seed sums/counts + delta seed sums/counts,
@@ -273,7 +275,6 @@ object VectorIndex {
           (coalesce(col("c"), lit(0L)) + coalesce(col("cd"), lit(0L))).as("c"))
         .filter(Similarity.assertCentroidExact(col("cv"), "IVF centroid"))
         .withColumn("nc", Similarity.selfDot(col("cv"))))
-      val codebook1 = Similarity.collapseCodebook(mergedCb)
       // every vector re-scored against the merged codebook: stored rows
       // (an empty base store's partitioned body has no readable schema —
       // stand in the typed empty frame) + the delta
@@ -283,24 +284,11 @@ object VectorIndex {
           case _: org.apache.spark.sql.AnalysisException =>
             s.emptyDataset[(Long, Array[Long], Long)].toDF("vec_id", "qv", "nq")
         }
-      val allVecs = pins(stored.unionByName(delta.select(col("vec_id"), col("qv"), col("nq"))))
-      val reassigned = pins(Similarity.ivfAssign(allVecs, codebook1))
-      // v6 RESIDUAL PQ: the rounded centroid moves with the merged sums,
-      // so every vector's residual changes and the old additive-sums merge
-      // no longer applies — recompute the subspace codebook and codes from
-      // the merged residual view (a linear pass over the store's own slim
-      // rows; the source table's floats are still never re-read)
-      val sd = Similarity.embDim(s) / 8
-      val rcents1 = pins.truncated(
+      val reassigned = pins(Similarity.ivfAssign(
+        stored.unionByName(delta.select(col("vec_id"), col("qv"), col("nq"))),
+        Similarity.collapseCodebook(mergedCb)))
+      val rcents = pins.truncated(
         Similarity.roundedCentroids(Similarity.assignedCentRows(reassigned)))
-      val resid = pins(Similarity.residualOf(reassigned, rcents1, "vec_id"))
-      // trained eagerly on the driver: a local frame, nothing to pin
-      val mergedPq = Similarity.pqCentroids(Similarity.subspaceRows(resid, "vec_id", sd))
-      val newCodes = Similarity
-        .pqCodes(Similarity.pqAssigned(Similarity.subspaceRows(resid, "vec_id", sd), mergedPq))
-        .join(reassigned.select(col("vec_id"), col("cell")), "vec_id")
-      // LSH buckets: old rows + the delta's — bucket values depend only
-      // on qv, so the union is row-identical to a rebuild's derivation
       val oldLsh =
         try graft.sources.Tables.stableParquet(s, s"$path/lshbuckets")
           .select(col("vec_id"), col("t").cast("int").as("t"), col("b").cast("int").as("b"))
@@ -308,40 +296,23 @@ object VectorIndex {
           case _: org.apache.spark.sql.AnalysisException =>
             s.emptyDataset[(Long, Int, Int)].toDF("vec_id", "t", "b")
         }
-      // graph-ANN bodies at O(delta) (r15, two-round since v6): the
-      // stored seed graph is spliced — only touched buckets re-pair,
-      // only affected srcs re-rank, only their in-neighbor pivots
-      // re-propose, and the first splice's re-rank set chains into the
-      // second round — and the result is ROW-IDENTICAL to a full
-      // regeneration (the monotone top-K and re-rank-set arguments in
-      // [[Similarity.nnGraphDelta]]; the parity spec compares against
-      // a rebuild byte for byte)
-      val (g0New, g1New, g2New) = Similarity.nnGraphDelta(
-        graft.sources.Tables.stableParquet(s, s"$path/g0graph"),
-        graft.sources.Tables.stableParquet(s, s"$path/g1graph"),
-        graft.sources.Tables.stableParquet(s, s"$path/nngraph"),
-        oldLsh,
-        Similarity.lshBucketPairs(delta, "vec_id"),
-        allVecs,
-        oldFrom,
-        pins)
+      val bucketPairs = pins(oldLsh.unionByName(Similarity.lshBucketPairs(delta, "vec_id")))
+      val (pqCents, pqCodes, graph) = derivedBodies(reassigned, rcents, bucketPairs, pins)
       // every body's plan READS the live bodies — the staged commit is
       // what makes that safe
       commit(s, dir, path, Some(newFrom),
         "vectors" -> reassigned,
         "codebook" -> mergedCb,
-        "rcentroids" -> rcents1,
+        "rcentroids" -> rcents,
         "qsample" -> graft.sources.Tables.stableParquet(s, s"$path/qsample")
           .unionByName(
             delta
               .filter(col("vec_id") % 100 === 0)
               .select(col("vec_id").as("query_id"), col("qv"), col("nq"))),
-        "pqcodes" -> newCodes,
-        "pqcodebook" -> mergedPq,
-        "lshbuckets" -> oldLsh.unionByName(Similarity.lshBucketPairs(delta, "vec_id")),
-        "g0graph" -> g0New,
-        "g1graph" -> g1New,
-        "nngraph" -> g2New,
+        "pqcodes" -> pqCodes,
+        "pqcodebook" -> pqCents,
+        "lshbuckets" -> bucketPairs,
+        "nngraph" -> graph,
         "gentries" -> Similarity.gEntriesOfAssigned(reassigned, mergedCb))
     } finally pins.release()
   }
@@ -357,15 +328,7 @@ object VectorIndex {
     * probes, same rescore, same oracle); zero embeddings scans when
     * fresh — candidate reads touch only the probed cell partitions. */
   def annIndexed(s: SparkSession, dir: String, path: String): DataFrame = {
-    if (!isFresh(s, dir, path)) build(s, dir, path)
-    val codebook = Similarity.collapseCodebook(
-      graft.sources.Tables.stableParquet(s, s"$path/codebook"))
-    val qf = graft.sources.Tables.stableParquet(s, s"$path/qsample")
-    val probes = ivfProbesCached(s, dir, path, codebook, qf)
-    // eager literal: the probed cell set (≤ 16 values) becomes a static
-    // partition filter, so the vectors read prunes at the reader instead
-    // of waiting on runtime pruning through the broadcast join
-    val cells = probes.select("cell").distinct().collect().map(_.getInt(0)).sorted
+    val (qf, probes, cells) = probed(s, dir, path)
     if (cells.isEmpty) {
       // all-gate-rejected corpus: the vectors body was an EMPTY
       // partitioned write (no readable schema) — return the scan-time
@@ -396,12 +359,7 @@ object VectorIndex {
     * float work happens at serve time through the same expressions the
     * scan-time operator uses. */
   def annIvfPqIndexed(s: SparkSession, dir: String, path: String): DataFrame = {
-    if (!isFresh(s, dir, path)) build(s, dir, path)
-    val codebook = Similarity.collapseCodebook(
-      graft.sources.Tables.stableParquet(s, s"$path/codebook"))
-    val qf = graft.sources.Tables.stableParquet(s, s"$path/qsample")
-    val probes = ivfProbesCached(s, dir, path, codebook, qf)
-    val cells = probes.select("cell").distinct().collect().map(_.getInt(0)).sorted
+    val (qf, probes, cells) = probed(s, dir, path)
     if (cells.isEmpty) {
       // all-gate-rejected corpus: empty partitioned bodies have no
       // readable schema — return the scan-time operator's empty frame
@@ -513,43 +471,48 @@ object VectorIndex {
       .select(col("vec_id"), col("qv"), col("nq"))
     // hop frames cached per (corpus stamp, STORE PATH): the digest keeps
     // two stores of one dir from serving each other's frontiers (the
-    // ivfProbesCached rule)
-    val pathTag = java.security.MessageDigest
-      .getInstance("MD5")
-      .digest(path.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_))
-      .mkString
+    // [[probed]] rule)
     Similarity.graphWalk(graph.select("src", "dst"), entries, vecs, qf,
-      hopCache = Some((s, dir, s"nn_walk_d${Similarity.embDim(s)}_p$pathTag")))
+      hopCache = Some((s, dir, s"nn_walk_d${Similarity.embDim(s)}_p${pathTag(path)}")))
   }
 
-  /** The probe frame is consumed twice (cell literal + rescore join) —
-    * stamp-cached so the second consumer reads ≤ 4·|queries| cached rows
-    * instead of re-scoring the sample ([[PipelineCache]]'s contract:
-    * rebuilds when the embeddings table changes on disk). The STORE PATH
-    * is folded into the tag: two stores of the same dir (a temp-path
-    * build beside the default path) must not serve each other's probe
-    * frames — the cached lineage reads path-specific qsample/codebook
-    * files, and a recompute-from-lineage after the other path is deleted
-    * would throw (the dim-in-tag rule, applied to the path axis). */
-  private def ivfProbesCached(
-      s: SparkSession,
-      dir: String,
-      path: String,
-      codebook: DataFrame,
-      qf: DataFrame): DataFrame = {
-    // collision-resistant tag: a 32-bit String.hashCode collision between
-    // two store paths would serve one store's probe lineage for the other
-    // — use the full MD5 of the path (the storePath digest convention)
-    val pathTag = java.security.MessageDigest
+  /** Fresh-or-rebuild, then the stored query sample, its IVF probes and
+    * the probed cell set — [[annIndexed]]'s and [[annIvfPqIndexed]]'s
+    * shared front half. The probe frame is consumed twice (cell literal
+    * + candidate join) — stamp-cached so the second consumer reads
+    * ≤ 4·|queries| cached rows instead of re-scoring the sample
+    * ([[PipelineCache]]'s contract: rebuilds when the embeddings table
+    * changes on disk); one tag, so warm IVF and IVF-ADC serving share
+    * it. The STORE PATH is folded into the tag: two stores of the same
+    * dir (a temp-path build beside the default path) must not serve each
+    * other's probe frames — the cached lineage reads path-specific
+    * qsample/codebook files, and a recompute-from-lineage after the
+    * other path is deleted would throw (the dim-in-tag rule, applied to
+    * the path axis). The cell set is an EAGER LITERAL (≤ 16 values,
+    * sorted): a static partition filter, so candidate reads prune at the
+    * reader instead of waiting on runtime pruning through the broadcast
+    * join. */
+  private def probed(s: SparkSession, dir: String, path: String): (DataFrame, DataFrame, Array[Int]) = {
+    if (!isFresh(s, dir, path)) build(s, dir, path)
+    val codebook = Similarity.collapseCodebook(
+      graft.sources.Tables.stableParquet(s, s"$path/codebook"))
+    val qf = graft.sources.Tables.stableParquet(s, s"$path/qsample")
+    val probes = PipelineCache.cached(
+      s"ivf_store_probes_d${Similarity.embDim(s)}_p${pathTag(path)}", s, dir, "embeddings.parquet")(
+      Similarity.ivfProbes(qf, codebook))
+    (qf, probes, probes.select("cell").distinct().collect().map(_.getInt(0)).sorted)
+  }
+
+  /** Collision-resistant store-path tag for stamp-cache keys: a 32-bit
+    * String.hashCode collision between two store paths would serve one
+    * store's cached lineage for the other — use the full MD5 of the path
+    * (the storePath digest convention). */
+  private def pathTag(path: String): String =
+    java.security.MessageDigest
       .getInstance("MD5")
       .digest(path.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_))
       .mkString
-    PipelineCache.cached(
-      s"ivf_store_probes_d${Similarity.embDim(s)}_p$pathTag", s, dir, "embeddings.parquet")(
-      Similarity.ivfProbes(qf, codebook))
-  }
 
   private[graft] def defaultPath(s: SparkSession, dir: String): String =
     Store.path(s, dir, store)

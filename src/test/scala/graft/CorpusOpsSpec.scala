@@ -19,7 +19,7 @@ class CorpusOpsSpec extends GraftSpecBase {
     spark.conf.set("spark.graft.corpus.storeRoot", s"$tmp/stores")
     try {
       val s0 = CorpusOps.storeStatus(spark, dir).collect()
-      assert(s0.length == 29, s"expected 29 store bodies, got ${s0.length}")
+      assert(s0.length == 27, s"expected 27 store bodies, got ${s0.length}")
       assert(s0.forall(r => !r.getAs[Boolean]("present") && !r.getAs[Boolean]("fresh")),
         "nothing is built yet — all stores must report absent")
       graft.operators.TextIndex.build(

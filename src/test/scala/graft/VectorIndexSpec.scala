@@ -197,7 +197,7 @@ class VectorIndexSpec extends GraftSpecBase {
     withStore { path =>
       VectorIndex.build(spark, sfDir, path)
       // simulate a store persisted by the r15 (v5) build: raw-vector PQ
-      // codebooks, no rcentroids/g1graph bodies — serving it false-fresh
+      // codebooks, no rcentroids body — serving it false-fresh
       // would answer residual query tables against raw codebooks
       val v5 = Seq(
         graft.operators.Store.stamp(spark, sfDir, "embeddings.parquet"),
@@ -212,12 +212,12 @@ class VectorIndexSpec extends GraftSpecBase {
       // false-fresh read CANNOT accidentally serve the right answer
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$path/rcentroids"))
       assert(!VectorIndex.isFresh(spark, sfDir, path), "v5 meta must read stale under v6 code")
-      // serving transparently rebuilds → v6 bodies present, answers the
-      // scan-time residual operator's rows exactly
+      // serving transparently rebuilds → every declared body present,
+      // answers the scan-time residual operator's rows exactly
       val idx = VectorIndex.annIvfPqIndexed(spark, sfDir, path).collect().toSeq
       assert(VectorIndex.isFresh(spark, sfDir, path))
-      assert(new java.io.File(s"$path/rcentroids").exists() &&
-        new java.io.File(s"$path/g1graph").exists())
+      for (body <- VectorIndex.store.bodies)
+        assert(new java.io.File(s"$path/$body").exists(), s"rebuilt store lacks $body")
       assert(idx == Similarity.annIvfPq(spark, sfDir).collect().toSeq,
         "migrated store diverged from the scan-time residual IVF-ADC")
     }
@@ -251,96 +251,22 @@ class VectorIndexSpec extends GraftSpecBase {
       assert(VectorIndex.isFresh(spark, sfDir, s"$tmp/idxA", Some(1000L)),
         "absorb did not re-bind")
       VectorIndex.build(spark, sfDir, s"$tmp/idxB", Some(1000L))
-      for (body <- Seq("vectors", "codebook", "rcentroids", "qsample", "pqcodes", "pqcodebook",
-          "lshbuckets", "g0graph", "g1graph", "nngraph", "gentries"))
+      for (body <- VectorIndex.store.bodies)
         assert(rows(s"$tmp/idxA", body) == rows(s"$tmp/idxB", body),
           s"absorbed $body diverges from a rebuild")
       // wrong oldFrom = stale base — loud, never a silent wrong merge
       intercept[IllegalStateException] {
         VectorIndex.absorb(spark, sfDir, s"$tmp/idxA", 400L, 2000L)
       }
-      // CHAINED absorbs: the second splice reads bodies the FIRST splice
-      // wrote (g0graph round-tripped through parquet, refined rows
-      // spliced twice) — still byte-identical to a one-shot rebuild
+      // CHAINED absorbs: the second absorb reads bodies the FIRST one
+      // wrote (vectors, codebook and buckets round-tripped through
+      // parquet) — still byte-identical to a one-shot rebuild
       VectorIndex.build(spark, sfDir, s"$tmp/idxC", Some(250L))
       VectorIndex.absorb(spark, sfDir, s"$tmp/idxC", 250L, 400L)
       VectorIndex.absorb(spark, sfDir, s"$tmp/idxC", 400L, 1000L)
-      for (body <- Seq("vectors", "codebook", "rcentroids", "qsample", "pqcodes", "pqcodebook",
-          "lshbuckets", "g0graph", "g1graph", "nngraph", "gentries"))
+      for (body <- VectorIndex.store.bodies)
         assert(rows(s"$tmp/idxC", body) == rows(s"$tmp/idxB", body),
           s"chained-absorbed $body diverges from a rebuild")
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-  }
-
-  test("absorb graph maintenance touches only the delta's bucket/graph neighborhood") {
-    // the O(delta) claim pinned structurally (scale-independent, unlike
-    // a count bound at fixture size): every seed-graph row absorb
-    // changes belongs to a delta id or a touched bucket's last-4
-    // established members (A), and every refined row it changes belongs
-    // to A or A's one-hop out-neighborhood under either graph state (S)
-    // — the exact recompute sets nnGraphDelta derives, so regeneration
-    // (which rewrites task-partitioning row sets corpus-wide on a plan
-    // change) cannot silently replace the splice
-    import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_vidx_delta").toString
-    val path = s"$tmp/idx"
-    def rowsBy(p: String): Map[Long, Set[(Long, Double)]] =
-      spark.read.parquet(p).collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
-    try {
-      VectorIndex.build(spark, sfDir, path, Some(400L))
-      val preG0 = rowsBy(s"$path/g0graph")
-      val preG1 = rowsBy(s"$path/g1graph")
-      val preFin = rowsBy(s"$path/nngraph")
-      val preLsh = spark.read.parquet(s"$path/lshbuckets")
-        .select(col("vec_id"), col("t").cast("int"), col("b").cast("int")).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
-      val delta = Similarity.quantizedEmbeddings(spark, sfDir)
-        .filter(col("vec_id") >= 400L && col("vec_id") < 1000L)
-      val deltaPairs = Similarity.lshBucketPairs(delta, "vec_id")
-        .select(col("vec_id"), col("t").cast("int"), col("b").cast("int")).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
-      val deltaIds = deltaPairs.map(_._1).toSet
-      val touched = deltaPairs.map(p => (p._2, p._3)).toSet
-      // tail width = the max seed stride (16): only those established
-      // members' windows can gain a delta id
-      val tails = preLsh.filter(r => touched((r._2, r._3)))
-        .groupBy(r => (r._2, r._3))
-        .toSeq
-        .flatMap { case (_, rs) => rs.map(_._1).sorted.takeRight(16).toSeq }
-        .toSet
-      VectorIndex.absorb(spark, sfDir, path, 400L, 1000L)
-      val postG0 = rowsBy(s"$path/g0graph")
-      val postG1 = rowsBy(s"$path/g1graph")
-      val postFin = rowsBy(s"$path/nngraph")
-      val aMax = deltaIds ++ tails
-      val g0Changed = (preG0.keySet ++ postG0.keySet)
-        .filter(k => preG0.get(k) != postG0.get(k))
-      assert(g0Changed.subsetOf(aMax),
-        s"seed rows changed outside the delta neighborhood: ${(g0Changed -- aMax).take(5)}")
-      // each refine round expands the affected set by one out-neighborhood
-      // under EITHER input-graph state — the exact chain nnGraphDelta's
-      // refineDelta derives, so the assertion is per level
-      def expand(ids: Set[Long], pre: Map[Long, Set[(Long, Double)]],
-          post: Map[Long, Set[(Long, Double)]]): Set[Long] =
-        ids ++
-          pre.view.filterKeys(ids).values.flatten.map(_._1).toSet ++
-          post.view.filterKeys(ids).values.flatten.map(_._1).toSet
-      val s1Max = expand(aMax, preG0, postG0)
-      val g1Changed = (preG1.keySet ++ postG1.keySet)
-        .filter(k => preG1.get(k) != postG1.get(k))
-      assert(g1Changed.subsetOf(s1Max),
-        s"first-refine rows changed outside S1: ${(g1Changed -- s1Max).take(5)}")
-      val s2Max = expand(s1Max, preG1, postG1)
-      val finChanged = (preFin.keySet ++ postFin.keySet)
-        .filter(k => preFin.get(k) != postFin.get(k))
-      assert(finChanged.subsetOf(s2Max),
-        s"refined rows changed outside S2: ${(finChanged -- s2Max).take(5)}")
-      // and the splice genuinely reuses the established graph: some
-      // established srcs' refined rows survive bit-identical
-      val untouched = preFin.keySet.filter(k => k < 400L && preFin.get(k) == postFin.get(k))
-      assert(untouched.nonEmpty, "no established rows survived — regeneration, not a splice")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
 

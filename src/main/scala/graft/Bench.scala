@@ -1,26 +1,83 @@
 package graft
+import java.util.Properties
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLongArray
+
+import graft.operators.Record
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
+/** Times every registered query (or the comma-separated subset named by
+  * the first argument: `runMain graft.Bench q1,q2`) and writes one record
+  * per query and pass to `bench_out.json`: seconds, jobs, stages, tasks,
+  * Janino compiles and the shared caches and stores it built or hit. */
 object Bench {
-  /** One query's timed run: wall seconds, whether it succeeded, and the
-    * Janino compiles (count and milliseconds) that ran meanwhile. */
-  final case class Run(name: String, secs: Double, ok: Boolean, compiles: Long, compileMs: Double)
+  /** One query's timed run: wall seconds, whether it succeeded, the Janino
+    * compiles (count and milliseconds) that ran meanwhile, and the caches
+    * and stores it built or hit ([[Record]]). */
+  final case class Run(name: String, secs: Double, ok: Boolean, compiles: Long, compileMs: Double,
+      built: Seq[String], hit: Seq[String])
 
   /** Computes the full result, every column of every row, and discards it:
     * `count()` would let column pruning skip work the result needs. */
   def materialise(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
+  /** Counts jobs, stages and tasks per job group. Listener events arrive
+    * asynchronously: the counts of a query are complete once the listener
+    * bus has drained, which `spark.stop()` waits for. Broadcast jobs run on
+    * other threads but inherit the group through Spark's captured local
+    * properties. */
+  final class Census extends SparkListener {
+    private val counts = new ConcurrentHashMap[String, AtomicLongArray]()
+
+    private def add(props: Properties, jobs: Int, stages: Int, tasks: Int): Unit =
+      Option(props).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach { g =>
+        val c = counts.computeIfAbsent(g, _ => new AtomicLongArray(3))
+        c.addAndGet(0, jobs)
+        c.addAndGet(1, stages)
+        c.addAndGet(2, tasks)
+      }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = add(e.properties, 1, 0, 0)
+
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      add(e.properties, 0, 1, e.stageInfo.numTasks)
+
+    /** Jobs, stages and tasks of `group` so far. */
+    def apply(group: String): Seq[Long] =
+      Option(counts.get(group)).fold(Seq(0L, 0L, 0L))(c => Seq(c.get(0), c.get(1), c.get(2)))
+  }
+
+  /** Materialises `df` under job group `group` with a [[Record]] open. */
+  def run(spark: SparkSession, name: String, group: String)(df: => DataFrame): Run = {
+    spark.sparkContext.setJobGroup(group, name)
+    val log = new Record.Log
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val ns0 = CodeGenerator.compileTime
+    val t0 = System.nanoTime()
+    val ok = Record.during(log) {
+      try { materialise(df); true }
+      catch { case _: Throwable => false }
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    spark.sparkContext.clearJobGroup()
+    Run(name, secs, ok, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+      (CodeGenerator.compileTime - ns0) / 1e6, log.built.toSeq, log.hit.toSeq)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-      // the job census below reads per-group job ids from the status
-      // store AFTER all passes; the 1000-job default evicts the warm
-      // pass's early queries (~700 jobs/pass × 4 passes) and reads 0
-      .config("spark.ui.retainedJobs", "20000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = args.headOption.fold(SparkEntry.queries.toSeq) { list =>
+      val names = list.split(',').toSeq.distinct
+      val unknown = names.filterNot(SparkEntry.queries.contains)
+      require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+      names.map(n => n -> SparkEntry.queries(n))
+    }.sortBy(_._1)
+    val spark = GraftSession.forMain()
+    val census = new Census
+    spark.sparkContext.addSparkListener(census)
     // Warmup: run every query once at the smallest SF so the timed pass
     // measures steady-state execution (janino-compiled codegen, JIT-warm
     // operators, loaded classes) — the regime a long-lived cluster runs in.
@@ -32,13 +89,13 @@ object Bench {
       .orElse(Option("/root/testdata/sf0.001").filter(d => new java.io.File(d).isDirectory))
       .getOrElse(sfDir)
     var warmFailures = 0
-    SparkEntry.queries.foreach { case (_, fn) =>
+    queries.foreach { case (_, fn) =>
       try materialise(fn(spark, warmDir))
       catch { case _: Throwable => warmFailures += 1 }
     }
     if (warmFailures > 0)
       System.err.println(
-        s"[bench] WARNING: $warmFailures/${SparkEntry.queries.size} warmup queries failed " +
+        s"[bench] WARNING: $warmFailures/${queries.size} warmup queries failed " +
           s"on $warmDir — timed numbers include first-run compile costs")
     // THREE full passes over the suite, per-query min across passes:
     // scheduler/GC noise on a shared box is strictly additive, so the min
@@ -49,42 +106,19 @@ object Bench {
     // run-scoped intermediates (the dedup candidate frame): clearing
     // shared caches at the START of each pass means the shared pipeline
     // is computed exactly once per pass, its cost landing on its first
-    // consumer in EVERY pass — so the min still reports it honestly
-    // instead of timing a cache hit. A FAILING query must not masquerade
-    // as a fast one (an exception path returns in ms) — failures are
-    // named loudly on stderr and in the JSON.
-    // Compiles are JVM-wide counters, read as deltas around each query.
+    // consumer in EVERY pass (its record lists the cache as built, the
+    // later consumers' as hit). A FAILING query must not masquerade as a
+    // fast one (an exception path returns in ms) — failures are named
+    // loudly on stderr and in the JSON.
     def timedPass(passIdx: Int): Seq[Run] = {
       graft.operators.Dedup.clearSharedCache()
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        // job-group tag per (query, pass): the floor-attribution census
-        // below reads the WARM pass's job count per query from the status
-        // tracker — exact attribution, no listener-race sleeps
-        spark.sparkContext.setJobGroup(s"$name#$passIdx", name)
-        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-        val ns0 = CodeGenerator.compileTime
-        val t0 = System.nanoTime()
-        val ok =
-          try { materialise(fn(spark, sfDir)); true }
-          catch { case _: Throwable => false }
-        val secs = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.clearJobGroup()
-        Run(name, secs, ok, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
-          (CodeGenerator.compileTime - ns0) / 1e6)
-      }
+      queries.map { case (name, fn) => run(spark, name, s"$name#$passIdx")(fn(spark, sfDir)) }
     }
     val passes = Seq(timedPass(0), timedPass(1), timedPass(2))
-    // per-query Spark-job counts from the LAST (steady-state) pass — the
-    // JobProbe floor discipline folded into the artifact: on local mode a
-    // sub-second query's wall clock is often jobs × scheduling floor, and
-    // this column is what lets ratio.py separate work from floor.
-    // Broadcast-thread jobs inherit the group through Spark's local-
-    // property capture; a straggling event is bounded by the drain sleep.
-    Thread.sleep(500)
-    val jobCounts = SparkEntry.queries.keys.toSeq.sorted.map { n =>
-      n -> spark.sparkContext.statusTracker.getJobIdsForGroup(s"$n#2").length
-    }.toMap
-    val names = passes.head.map(_.name)
+    graft.operators.Dedup.clearSharedCache()
+    val cpus = spark.sparkContext.defaultParallelism
+    spark.stop() // drains the listener bus: the census is complete after this
+    val names = queries.map(_._1)
     val timed = names.zipWithIndex.map { case (name, i) =>
       val ts = passes.map(_(i).secs)
       (name, ts.min, passes.forall(_(i).ok), ts)
@@ -92,15 +126,12 @@ object Bench {
     // per-pass suite totals + per-query outliers go into the compact JSON
     // so a noisy box is VISIBLE in the artifact instead of masquerading
     // as a regression (max/min > 2.5× and an absolute gap worth caring
-    // about); full per-pass times live in the file sink below
+    // about); full per-pass records live in the file sink below
     val passTotals = passes.map(_.map(_.secs).sum)
     val passCompiles = passes.map(_.map(_.compiles).sum)
     val noisy = timed.collect {
       case (name, mn, _, ts) if ts.max > mn * 2.5 && ts.max - mn > 0.3 => name
     }
-    // release the pass-2 persisted candidate frame — harmless here (the JVM
-    // exits) but mandatory if this main is ever invoked in-process
-    graft.operators.Dedup.clearSharedCache()
     val failed = timed.collect { case (name, _, false, _) => name }
     failed.foreach(n => System.err.println(s"[bench] ERROR: query $n FAILED during timing"))
     // 3-decimal times: ms resolution is all the comparison needs, and the
@@ -111,12 +142,11 @@ object Bench {
     // a hard budget (slowest queries first, remainder summarized); the
     // FULL per-query map always goes to the bench_out.json sink below.
     def dp3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    def strs(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = timed.map(_._2).sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = strs(failed)
     val passTotalsJson = passTotals.map(dp3).mkString("[", ",", "]")
     val passCompilesJson = passCompiles.mkString("[", ",", "]")
-    // noisy list capped: names are diagnostic, the COUNT is the signal
-    val noisyJson = noisy.take(6).map("\"" + _ + "\"").mkString("[", ",", "]")
     // Fit the per-query map to the remaining budget, slowest queries first
     // (they are the ones a reader compares against the baseline); queries
     // that don't fit are rolled up into queries_omitted/omitted_sec so the
@@ -126,7 +156,7 @@ object Bench {
       s"""{"metric":"total","value":${dp3(total)},"unit":"sec","queries":$qJson,""" +
         s""""queries_omitted":$omitted,"omitted_sec":${dp3(omittedSec)},""" +
         s""""failed":$failedJson,"pass_totals":$passTotalsJson,"pass_compiles":$passCompilesJson,""" +
-        s""""noisy_n":${noisy.size},"noisy":$noisyJson,"detail":"bench_out.json","sf":"$sfDir"}"""
+        s""""noisy_n":${noisy.size},"noisy":${strs(noisy.take(6))},"detail":"bench_out.json","sf":"$sfDir"}"""
     val budget = 1850 // leaves room for sbt's trailing "[success] Total time" line
     val overhead = lineFor("{}", timed.size, total).length
     var used = overhead
@@ -135,92 +165,30 @@ object Bench {
     val json = lineFor(
       kept.map(_._2).mkString("{", ",", "}"), omitted.size, omitted.map(_._3).sum)
     println(json)
-    // The full artifact: every query's min + per-pass times, plus the
-    // shared-cache / store-backed disclosures (within a pass each group
-    // below shares one cached candidate pipeline, so the group's
-    // alphabetically-first query carries that pipeline's cost and the rest
-    // time a cache hit — the suite TOTAL is honest, per-query deltas
-    // across rounds within a group are not standalone costs; store-backed
-    // queries build a persisted artifact on pass 1 and serve from it
-    // after, so their pass-1 spike is warmup, not box noise).
+    // The full artifact: every query's min, its last pass's job count
+    // (tools/ratio.py's floor input), and per pass its record.
     val qsFull = timed.map { case (k, v, _, _) => s"\"" + k + "\":" + dp3(v) }
       .mkString("{", ",", "}")
-    val sharedCache = Seq(
-      "ngram" -> Seq(
-        "corpus_curate", "corpus_dedup_ng", "dedup_clusters", "dedup_incremental",
-        "dedup_ngram_jaccard", "dedup_survivorship", "graph_pagerank",
-        "graph_triangles", "split_leakage", "text_edit_sim"),
-      "minhash" -> Seq("corpus_dedup", "dedup_minhash", "dedup_recall", "dedup_simhash"),
-      // r18: the slim signature frames behind the minhash/simhash kernels
-      "minhash_sigs" -> Seq("corpus_dedup", "dedup_minhash", "dedup_recall", "dedup_simhash"),
-      "simhash_sigs" -> Seq("dedup_recall", "dedup_simhash"),
-      "bpe_merge_table" -> Seq(
-        "text_bpe_train", "text_fertility_tokenizers", "text_tokenize_ids", "train_pack_ids"),
-      "unigram_table" -> Seq(
-        "text_fertility_tokenizers", "text_tokens_unigram", "text_unigram_train"),
-      "chunk_emb" -> Seq("ann_chunk_lsh", "ann_chunk_topk"),
-      "spandup_grams" -> Seq("text_span_dup", "text_span_excise"),
-      "ivf_qsample" -> Seq("ann_ivf_topk", "ann_ivfpq_topk", "ann_pq_topk", "ann_recall"),
-      "lsh_qsample" -> Seq("ann_graph_topk", "ann_lsh_topk", "ann_recall"),
-      "kmeans_assign" -> Seq("dedup_semantic", "emb_kmeans"),
-      "pca_scatter" -> Seq("emb_pca_top", "emb_project2d"),
-      "pq" -> Seq("ann_ivfpq_idx", "ann_ivfpq_topk", "ann_pq_topk", "ann_recall", "emb_pq"),
-      "ivf_store_probes" -> Seq("ann_ivf_idx", "ann_ivfpq_idx"),
-      // only live on the store-FALLBACK path (vector store absent/stale —
-      // e.g. a cold storeRoot or a post-absorb meta with a non-empty
-      // exclusion): when the default store is fresh these queries read the
-      // persisted nngraph body instead (store_backed below) and the tag's
-      // cached frames never materialize
-      "nn_graph" -> Seq("ann_graph_topk", "ann_recall"),
-      // r18: mm_near_dup's slim phash frame (hot-block census + both
-      // candidate join sides; the r17 er_keys cache is gone — er_pairs'
-      // candidate generation is one capped-collect aggregate now)
-      "mm_phash" -> Seq("mm_near_dup"),
-      "mm_features" -> Seq("mm_dedup", "mm_features"))
-      .map { case (tag, qs) =>
-        s"\"$tag\":" + qs.filter(SparkEntry.queries.contains).map("\"" + _ + "\"").mkString("[", ",", "]")
-      }
-      .mkString("{", ",", "}")
-    // r15: the quality family serves the persisted quality-model store
-    // (features/labels/weights/scored bodies) and ann_graph_topk /
-    // ann_recall's graph leg read the fresh vector store's nngraph body
-    // — their pass-1 spike is the store build, later passes serve warm
-    val storeBacked = Seq("dedup_incremental_idx", "corpus_profile", "text_search_idx",
-        "ann_ivf_idx", "ann_ivfpq_idx", "ann_lsh_idx", "ann_graph_idx",
-        "dedup_incremental_bloom", "ann_graph_topk", "ann_recall",
-        "text_quality_train", "text_quality_model", "text_quality_eval",
-        "text_quality_calibration", "text_quality_holdout",
-        // r16: the quality store's v2 bodies — trained langid + DSIR
-        "langid_train", "langid_model", "langid_holdout", "text_dsir",
-        // r17: the clustered census served from graft_recall's slim
-        // pair bodies (built once per embeddings stamp)
-        "ann_recall_clustered")
-      .filter(SparkEntry.queries.contains)
-      .map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-    val noisyFullJson = noisy.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val passesJson = timed
-      .map { case (k, _, _, ts) => s"\"" + k + "\":" + ts.map(dp3).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val jobsJson = timed
-      .map { case (k, _, _, _) => s"\"" + k + "\":" + jobCounts.getOrElse(k, 0) }
-      .mkString("{", ",", "}")
-    // per query and pass: [Janino compiles, compile ms]
-    val codegenJson = names.zipWithIndex
+    val jobsJson = names.map(k => s"\"" + k + "\":" + census(s"$k#2").head).mkString("{", ",", "}")
+    val recordJson = names.zipWithIndex
       .map { case (k, i) =>
-        s"\"" + k + "\":" + passes.map(p => s"[${p(i).compiles},${dp3(p(i).compileMs)}]").mkString("[", ",", "]")
+        s"\"" + k + "\":" + passes.zipWithIndex.map { case (p, pi) =>
+          val r = p(i)
+          val Seq(jobs, stages, tasks) = census(s"$k#$pi")
+          s"""{"secs":${dp3(r.secs)},"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
+            s""""compiles":${r.compiles},"compile_ms":${dp3(r.compileMs)},""" +
+            s""""built":${strs(r.built)},"hit":${strs(r.hit)}}"""
+        }.mkString("[", ",", "]")
       }
       .mkString("{", ",", "}")
     val fileJson =
       s"""{"metric":"total","value":${dp3(total)},"unit":"sec","queries":$qsFull,""" +
-        s""""failed":$failedJson,"pass_totals":$passTotalsJson,"noisy":$noisyFullJson,""" +
-        s""""shared_cache":$sharedCache,"store_backed":$storeBacked,"sf":"$sfDir",""" +
-        s""""jobs":$jobsJson,"passes":$passesJson,"pass_compiles":$passCompilesJson,""" +
-        s""""codegen":$codegenJson}"""
+        s""""failed":$failedJson,"pass_totals":$passTotalsJson,"noisy":${strs(noisy)},""" +
+        s""""sf":"$sfDir","cpus":$cpus,"jobs":$jobsJson,"pass_compiles":$passCompilesJson,""" +
+        s""""record":$recordJson}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")),
       (fileJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Exception => System.err.println(s"[bench] WARN: bench_out.json not written: $e") }
-    spark.stop()
   }
 }

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Tuned SparkSession factory for the graft engine: graftbench, the specs,
-  * every main (`Bench`, `Verify`, `JobProbe`, `ScaleProbe`) and README
-  * users build their session here, so all of them run one regime. The
-  * knobs are the ones a cluster deployment would set too:
+  * every main (`Bench`, `Verify`, `ScaleProbe`, through [[forMain]]) and
+  * README users build their session here, so all of them run one regime.
+  * The knobs are the ones a cluster deployment would set too:
   *   - AQE on: runtime coalescing + skew-join splitting replace hand-tuned
   *     partition counts when data volume moves 100×.
   *   - 64 MB broadcast-join threshold (Spark's default is 10 MB).
@@ -53,6 +53,16 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
 
   def local(): SparkSession = builder().getOrCreate()
+
+  /** The session of graft's mains: `local[n]` with `n` shuffle partitions,
+    * where `n` is `SPARK_GRAFT_CPUS` or else the JVM's available
+    * processors; Spark's log at WARN. */
+  def forMain(): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+    val spark = builder(master = s"local[$cpus]", shufflePartitions = cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Apply graft's session-level settings to an externally built session
     * (one not from [[builder]]); safe to call repeatedly. Static settings,

@@ -15,11 +15,11 @@ import org.apache.spark.sql.functions._
   * Plain duplication would instead multiply every gram's df by N and
   * empty the rarity band — a probe that flatters the pipeline.
   *
-  * Times each probed operator on the source (1×) and the synthetic (N×)
-  * table, min-of-2 per point, and prints one JSON line of seconds +
-  * N×/1× ratios. A ratio ≈ N is linear scaling; the interesting
-  * operators are the candidate-pair pipelines whose naive formulations
-  * are quadratic.
+  * Times each probed operator's full result (`Bench.materialise`) on the
+  * source (1×) and the synthetic (N×) table, min-of-2 per point, and
+  * prints one JSON line of seconds + N×/1× ratios. A ratio ≈ N is linear
+  * scaling; the interesting operators are the candidate-pair pipelines
+  * whose naive formulations are quadratic.
   *
   * Caveats: factor is capped at 26 (only 26 distinct Caesar rotations),
   * and only lowercase a–z is rotated — digits/uppercase/punctuation stay
@@ -39,9 +39,7 @@ object ScaleProbe {
     // copies duplicate earlier ones exactly, silently breaking the
     // distinct-content premise the measurements rest on
     require(factor >= 1 && factor <= 26, s"factor must be in [1, 26], got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
 
     // synthetic dir keyed by (source, factor): a marker-only scheme with
     // a shared dir would silently time data built from a DIFFERENT
@@ -435,7 +433,7 @@ object ScaleProbe {
       def once(): Double = {
         Dedup.clearSharedCache()
         val t0 = System.nanoTime()
-        fn(spark, dir).count()
+        Bench.materialise(fn(spark, dir))
         (System.nanoTime() - t0) / 1e9
       }
       math.min(once(), once())

@@ -12,9 +12,7 @@ object Verify {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, q) => (s, o, Some(q.split(',').toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

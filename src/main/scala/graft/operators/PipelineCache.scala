@@ -32,7 +32,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * entry for a stopping session, so no persisted frame or session ref
   * outlives its SparkContext. [[clear]] releases everything eagerly
   * (Bench does, between timing passes, so shared pipeline cost stays
-  * visible exactly once per pass). */
+  * visible exactly once per pass). Every build and hit goes to
+  * [[Record]]. */
 private[graft] object PipelineCache {
 
   private val cache =
@@ -93,11 +94,12 @@ private[graft] object PipelineCache {
     lock.synchronized {
       val stamp = Store.stamp(s, dir, table)
       val cur = cache.get(key)
-      if (cur != null && cur._1 == stamp) cur._2
+      if (cur != null && cur._1 == stamp) { Record.hit(tag); cur._2 }
       else {
         if (cur != null) cur._2.unpersist(blocking = false)
         val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         cache.put(key, (stamp, df))
+        Record.built(tag)
         df
       }
     }
@@ -111,7 +113,7 @@ private[graft] object PipelineCache {
     * pair frame). */
   def peek(tag: String, s: SparkSession, dir: String, table: String): Option[DataFrame] =
     Option(cache.get((s, dir, tag))).collect {
-      case (stamp, df) if stamp == Store.stamp(s, dir, table) => df
+      case (stamp, df) if stamp == Store.stamp(s, dir, table) => Record.hit(tag); df
     }
 
   /** Driver-side VALUE twin of [[cached]] (r18): memoizes a bounded
@@ -130,10 +132,11 @@ private[graft] object PipelineCache {
     lock.synchronized {
       val stamp = Store.stamp(s, dir, table)
       val cur = values.get(key)
-      if (cur != null && cur._1 == stamp) cur._2.asInstanceOf[T]
+      if (cur != null && cur._1 == stamp) { Record.hit(tag); cur._2.asInstanceOf[T] }
       else {
         val v = build
         values.put(key, (stamp, v))
+        Record.built(tag)
         v
       }
     }

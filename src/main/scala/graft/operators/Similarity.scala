@@ -937,15 +937,20 @@ object Similarity {
     * the oracle pins every rounded value without shipping arrays through
     * the compare; library users take `quantizeInt8` for the raw columns.
     *
-    * Exactness across engines: `e[i]` is float32, promoted exactly to
-    * double in both; `scale` and `e[i]/scale` are then single
-    * exactly-rounded IEEE double ops, and both engines round halves away
-    * from zero — bit-identical digests, no tolerance anywhere. The
-    * `greatest(·, 1e-12)` floor makes the all-zero vector quantize to
-    * zeros instead of NaN. Scale shape: a pure narrow map at scan speed
-    * (the one shuffle is the output sort, dropped in library use). */
+    * Exactness across engines: `e[i]` is float32. `max|e| / 127` is a
+    * float32 division in DuckDB, so the scale is rounded to float32 here
+    * too (a double quotient rounded to float32 is the float32 quotient);
+    * without that, a component at exactly half of `max|e|` divides to
+    * 63.5 and rounds to 64, where DuckDB's scale gives 63.49999… and 63.
+    * `e[i]/scale` is then one exactly-rounded IEEE double op in both, and
+    * both engines round halves away from zero — bit-identical digests, no
+    * tolerance anywhere. The `greatest(·, 1e-12)` floor makes the
+    * all-zero vector quantize to zeros instead of NaN. Scale shape: a
+    * pure narrow map at scan speed (the one shuffle is the output sort,
+    * dropped in library use). */
   def quantizeInt8(c: Column): (Column, Column) = {
-    val scale = greatest(array_max(transform(c, x => abs(x))) / 127.0, lit(1e-12))
+    val scale = greatest(
+      (array_max(transform(c, x => abs(x))) / 127.0).cast("float").cast("double"), lit(1e-12))
     (scale, transform(c, x => round(x / scale).cast("long")))
   }
 
@@ -1639,7 +1644,8 @@ object Similarity {
     * shared by [[embPq]] and [[annPq]] (the kmCorpus precedent — without
     * it each consumer re-ran the embeddings scan + 8× explode, and
     * [[annPq]] alone scanned it twice through the centroid and
-    * assignment branches). Bench discloses the pair under `shared_cache`.
+    * assignment branches). Bench's per-query record shows which consumer
+    * built the pair and which hit it.
     * The training itself runs EAGERLY inside the cache build (driver
     * Lloyd loop, [[pqTrain]]) — once per source stamp. */
   private[operators] def pqFrames(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
@@ -2073,7 +2079,7 @@ object Similarity {
     * already defines (vec_id % 100), never corpus × corpus. The brute
     * pair set is consumed twice (intersection probe + n_pairs); the
     * multi-consumer subtree rule applies, so it is stamp-cached
-    * (shared_cache) and both consumers read ≤ 5·|queries| cached rows.
+    * and both consumers read ≤ 5·|queries| cached rows.
     * All five method frames and the pair set are bounded by 5·|queries|,
     * so every join below broadcasts the bounded side. */
   def annRecall(s: SparkSession, dir: String): DataFrame = {
@@ -2757,7 +2763,7 @@ object Similarity {
     * scan-time construction below runs, stamp-cached in three stages
     * (seed graph + two NN-descent refine rounds — r15 verdict #2, each
     * stage behind a plan-truncation barrier) so all consumers still
-    * share ONE build per source stamp (shared_cache disclosure) — and
+    * share ONE build per source stamp (Bench records it built once) — and
     * [[VectorIndex.build]]'s default path persists exactly that cached
     * frame (a rebuild of a fresh store reads the live body, which its
     * staged [[Store.commit]] replaces only after every body is written). */
@@ -2968,8 +2974,8 @@ object Similarity {
     val dim = embDim(s)
     // the aggregated triangle is a bounded ≤ dim·(dim+1)/2-row frame and
     // [[pcaTop]] and [[project2d]] both need it — stamp-cached so the
-    // corpus pass runs once per source stamp across the family
-    // (shared_cache disclosure, the ivf_qsample convention)
+    // corpus pass runs once per source stamp across the family (the
+    // ivf_qsample convention)
     val cells = PipelineCache.cached(s"pca_scatter_d$dim", s, dir, "embeddings.parquet")(
       quantized(s, dir)
         .select(col("qv"))

@@ -34,6 +34,9 @@ import org.apache.spark.sql.functions.col
   *     consumer needs. A store's `isFresh` and [[CorpusOps.storeStatus]]
   *     both read it, so they cannot disagree.
   *
+  * [[fresh]] records a hit of `store:<name>` and [[commit]] a build, in
+  * [[Record]].
+  *
   * Concurrency: a commit racing a reader of the same path can fail that
   * reader's scan, so callers serialize builds of one path against its
   * readers (the driver's use is sequential). */
@@ -120,6 +123,7 @@ private[graft] object Store {
       path: String,
       binding: Option[String]): Option[Meta] =
     readMeta(s, path).filter(matches(_, stamp(s, dir, d.table), d.version(s), binding))
+      .map { m => Record.hit(s"store:${d.name}"); m }
 
   /** The preconditions of an absorb that folds the documents batch
     * `oldDelta` into the store `d` and re-binds it to `newDelta`: the
@@ -173,6 +177,7 @@ private[graft] object Store {
     val out = f.create(metaPath(path), true)
     try out.write(meta.map { case (k, v) => s"$k=$v" }.mkString("\n").getBytes(UTF_8))
     finally out.close()
+    Record.built(s"store:${d.name}")
   }
 
   /** Hadoop FileSystem rename that throws instead of returning false. */

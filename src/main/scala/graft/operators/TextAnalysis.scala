@@ -713,8 +713,8 @@ object TextAnalysis {
     * reports the empty string's md5, never a resurrection of its text.
     *
     * Shape: the dup-gram set derives from the SAME stamp-cached gram
-    * frame the census uses (one build per stamp across both queries,
-    * disclosed under shared_cache); positional grams are a second
+    * frame the census uses (one build per stamp across both queries);
+    * positional grams are a second
     * codegen'd explode+substring scan (positions aren't in the deduped
     * cache — and only the df ≥ 2 survivors reach the windowed islands
     * pass, output ∝ duplication, not corpus). The kept-text rebuild
@@ -3531,7 +3531,7 @@ utok AS MATERIALIZED (SELECT doc_id,
     "text_novelty" -> (novelty _),
     // the FIT rounds ride the SAME stamp-cached merge table its APPLY
     // consumers read (tokenize/pack) — one M-round computation per
-    // source stamp across the family, disclosed under shared_cache
+    // source stamp across the family
     "text_bpe_train" -> ((s, d) =>
       PipelineCache.cached("bpe_merge_table", s, d, "documents.parquet")(bpeTrain(s, d))),
     // the SECOND tokenizer family: unigram-LM fit (same cached-FIT rule)

@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
   *
   * Stamp, meta, staged commit and freshness follow [[Store]];
   * [[searchIndexed]] rebuilds when stale (first driver call builds, later
-  * calls — e.g. bench passes — find it fresh, so the build reads as
-  * pass-1 warmup under the bench's `store_backed` flag).
+  * calls — e.g. bench passes — find it fresh; Bench's per-query record
+  * lists the store as built in pass 1 and hit after).
   */
 object TextIndex {
 

@@ -1075,6 +1075,23 @@ class PipelineOpsSpec extends GraftSpecBase {
     assert(worst <= 0.500001, s"reconstruction error $worst × scale exceeds the rounding bound")
   }
 
+  test("emb_quantize: a component at half of max|x| rounds like DuckDB's float32 scale") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("quantize_tie").toString
+    // 0.31f is exactly half of 0.62f: over a float32 scale it divides to
+    // 63.49999709 (DuckDB 1.0's answer), over a double scale to 63.5
+    Seq((1L, Array(-0.62f, 0.31f), 0))
+      .toDF("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val r = Similarity.embQuantize(spark, dir).head()
+    // the row DuckDB's embQuantizeSql returns for this table
+    assert(r.getAs[Double]("scale") == 0.004882)
+    assert(r.getAs[Long]("q_max") == 63, s"q_max ${r.getAs[Long]("q_max")}")
+    assert(r.getAs[Long]("q_min") == -127)
+    assert(r.getAs[Long]("q_sum") == -64)
+    assert(r.getAs[Long]("q_l1") == 190)
+  }
+
   test("text_pii: counts reconcile and redaction changes exactly the flagged docs") {
     val p = TextAnalysis.pii(spark, sfDir)
     // n_pii is the exact sum of its parts

@@ -2,9 +2,12 @@ package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 /** The session regime every entry point shares: the codegen class cache
-  * that `GraftSession.builder` sizes, and `Bench`'s full-result action. */
+  * that `GraftSession.builder` sizes, and `Bench`'s full-result action
+  * and per-query record. */
 class SessionSpec extends GraftSpecBase {
 
   test("the builder's session reports the codegen cache constant") {
@@ -36,5 +39,36 @@ class SessionSpec extends GraftSpecBase {
     assert(df.count() == 3)
     val e = intercept[Exception](Bench.materialise(df))
     assert(e.getMessage.contains("evaluated"))
+  }
+
+  test("Bench records each query's jobs and the caches and stores it built or hit") {
+    val census = new Bench.Census
+    spark.sparkContext.addSparkListener(census)
+    // a store root of its own, so the first corpus_profile call builds
+    val root = java.nio.file.Files.createTempDirectory("record_stores").toString
+    spark.conf.set("spark.graft.corpus.storeRoot", root)
+    try {
+      graft.operators.Dedup.clearSharedCache()
+      def run(name: String, group: String) =
+        Bench.run(spark, name, group)(SparkEntry.queries(name)(spark, sfDir))
+      val train = run("text_bpe_train", "record#train")
+      val tokenize = run("text_tokenize_ids", "record#tokenize")
+      val first = run("corpus_profile", "record#profile1")
+      val second = run("corpus_profile", "record#profile2")
+      Seq(train, tokenize, first, second).foreach(r => assert(r.ok, s"${r.name} failed"))
+      assert(train.built.contains("bpe_merge_table"), train)
+      assert(tokenize.hit.contains("bpe_merge_table") && !tokenize.built.contains("bpe_merge_table"),
+        tokenize)
+      assert(first.built.contains("store:corpus_profile"), first)
+      assert(second.hit.contains("store:corpus_profile") && !second.built.contains("store:corpus_profile"),
+        second)
+      eventually(timeout(20.seconds)) {
+        for (g <- Seq("record#train", "record#tokenize", "record#profile1", "record#profile2"))
+          assert(census(g).forall(_ > 0), s"$g: jobs, stages, tasks ${census(g)}")
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(census)
+      spark.conf.unset("spark.graft.corpus.storeRoot")
+    }
   }
 }
